@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /**
- * Benchmark main (driver contract): runs headline queries on
- * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Includes a replica of the
- * reference's rtree_points benchmark workload (10M uniform points,
- * envelope count — benchmark/rtree_points_index.benchmark:10-19) plus
- * the operators that matter at scale: grid spatial join, minhash
- * dedup, embedding top-k, hilbert clustering.
+ * Benchmark main (driver contract): times the [[BenchRows]] registry
+ * on SPARK_GRAFT_SF_DIR, then each row's DuckDB oracle, and prints the
+ * artifact line and the grading line. An optional comma-separated row
+ * list (`Bench pack_10m,dedup_exact_10m`) runs only those rows, in the
+ * order given (a name may repeat), building only their fixtures; each
+ * row's time and checksum go to stderr.
  */
 object Bench {
 
@@ -67,19 +66,9 @@ object Bench {
    *  grading line (no vs_oracle structs survive the truncation), so
    *  the legacy `{"s":..,"d":..,"r":..}` parse falls back to the
    *  grading line's flat `"amortized":{name:ratio}` map. */
-  private[graft] def prevRatios(dir: String = "."): Map[String, Double] = try {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => -"\\d+".r.findFirstIn(f.getName).get.toInt)
-    val re = """\\?"([A-Za-z0-9_]+)\\?":\{\\?"s\\?":[0-9.]+,\\?"d\\?":[0-9.]+,\\?"r\\?":([0-9.]+)""".r
-    files.iterator.map { f =>
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val legacy = re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        if (legacy.nonEmpty) legacy else flatObject(txt, "amortized")
-      } catch { case _: Exception => Map.empty[String, Double] }
-    }.find(_.nonEmpty).getOrElse(Map.empty)
-  } catch { case _: Exception => Map.empty }
+  private[graft] def prevRatios(dir: String = "."): Map[String, Double] = newestPrior(dir,
+    """\\?"([A-Za-z0-9_]+)\\?":\{\\?"s\\?":[0-9.]+,\\?"d\\?":[0-9.]+,\\?"r\\?":([0-9.]+)""".r,
+    "amortized")
 
   /** Prior-round SPARK seconds per row, same artifact-fallback
    *  discipline as [[prevRatios]]. Feeds the r16 spark-jump
@@ -88,16 +77,27 @@ object Bench {
    *  slowed too on the contended box) moved under the 3x RATIO trigger
    *  and got no confirm — time jumps need their own trigger. r17
    *  fallback: the grading line's flat `"queries":{name:sec}` map. */
-  private[graft] def prevSparkTimes(dir: String = "."): Map[String, Double] = try {
+  private[graft] def prevSparkTimes(dir: String = "."): Map[String, Double] = newestPrior(dir,
+    """\\?"([A-Za-z0-9_]+)\\?":\{\\?"s\\?":([0-9.]+),\\?"d\\?":[0-9.\-]+""".r,
+    "queries")
+
+  /** The first non-empty `name -> value` map over the BENCH_r*.json
+   *  artifacts in `dir`, newest first: the `legacy` regex's (name,
+   *  value) groups, else the grading line's `field` map — searched
+   *  only after the grading line's metric name, because the total line
+   *  above it also carries a "queries" map, with -1.000 sentinels. */
+  private def newestPrior(dir: String, legacy: scala.util.matching.Regex,
+      field: String): Map[String, Double] = try {
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("BENCH_r\\d+\\.json"))
       .sortBy(f => -"\\d+".r.findFirstIn(f.getName).get.toInt)
-    val re = """\\?"([A-Za-z0-9_]+)\\?":\{\\?"s\\?":([0-9.]+),\\?"d\\?":[0-9.\-]+""".r
     files.iterator.map { f =>
       try {
         val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val legacy = re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        if (legacy.nonEmpty) legacy else flatObject(txt, "queries")
+        val m = legacy.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
+        val at = txt.lastIndexOf("amortized_geomean_vs_oracle")
+        if (m.nonEmpty) m else if (at < 0) Map.empty[String, Double]
+        else flatObject(txt.substring(at), field)
       } catch { case _: Exception => Map.empty[String, Double] }
     }.find(_.nonEmpty).getOrElse(Map.empty)
   } catch { case _: Exception => Map.empty }
@@ -168,8 +168,9 @@ object Bench {
    *  HARD length guard: the driver keeps only the final ~2000 chars of
    *  stdout, and the sbt epilogue eats ~80 of them. If the body would
    *  overflow that window the CHEAPEST rows are trimmed from "queries"
-   *  first (with a "q_trimmed" count, so the trim is visible), because
-   *  a line whose head is cut is not JSON at all. */
+   *  first (with a "q_trimmed" count, so the trim is visible); if that
+   *  is not enough, "r_ub" and then "ungraded" become "n_r_ub" and
+   *  "n_ungraded" counts — a line whose head is cut is not JSON at all. */
   private[graft] def gradingBody(
       results: Seq[(String, Double)],
       duck: Map[String, Double],
@@ -208,9 +209,9 @@ object Bench {
     def fmtR(r: Double) = strip(if (r < 0.01) f"$r%.4f" else f"$r%.2f")
     val aJson = amort.map { case (k, r) => "\"" + k + "\":" + fmtR(r) }
       .mkString("{", ",", "}")
-    val uJson = rubs.map { case (k, r) => "\"" + k + "\":" + strip(f"$r%.4f") }
-      .mkString("{", ",", "}")
-    val ugJson = ungraded.map("\"" + _ + "\"").mkString("[", ",", "]")
+    var uField = rubs.map { case (k, r) => "\"" + k + "\":" + strip(f"$r%.4f") }
+      .mkString(""""r_ub":{""", ",", "}")
+    var ugField = ungraded.map("\"" + _ + "\"").mkString(""""ungraded":[""", ",", "]")
     val skJson =
       if (skipped.isEmpty) ""
       else skipped.map("\"" + _ + "\"").mkString(""""skipped":[""", ",", "],")
@@ -221,7 +222,7 @@ object Bench {
       val qJson = rows.map { case (k, v) => "\"" + k + "\":" + strip(f"$v%.1f") }
         .mkString("{", ",", "}")
       val tr = if (trimmed > 0) s""""q_trimmed":$trimmed,""" else ""
-      f""""metric":"amortized_geomean_vs_oracle","value":$geomean%.3f,"unit":"ratio","amortized":$aJson,"r_ub":$uJson,"n_amortized":${amort.size}%d,"over_gate":$overGate%d,"ungraded":$ugJson,$skJson$tr"queries":$qJson,"partial":$partial,"sf":"$sfDir""""
+      f""""metric":"amortized_geomean_vs_oracle","value":$geomean%.3f,"unit":"ratio","amortized":$aJson,$uField,"n_amortized":${amort.size}%d,"over_gate":$overGate%d,$ugField,$skJson$tr"queries":$qJson,"partial":$partial,"sf":"$sfDir""""
     }
     // 2000-char driver tail minus ~80 sbt epilogue minus the {"pad":".",}
     // scaffold and a safety margin
@@ -235,49 +236,34 @@ object Bench {
       trimmed += 1
       body = assemble(keep, trimmed)
     }
+    // second stage, once "queries" is empty: the r_ub map, then the
+    // ungraded list, shrink to their counts
+    if (body.length > maxBody) { uField = s""""n_r_ub":${rubs.size}"""; body = assemble(keep, trimmed) }
+    if (body.length > maxBody) { ugField = s""""n_ungraded":${ungraded.size}"""; body = assemble(keep, trimmed) }
+    if (body.length > maxBody)
+      System.err.println(s"[bench] grading line body is ${body.length} chars, over the $maxBody-char tail window")
     body
+  }
+
+  /** The bench session (shared with the test-side Probe harness).
+   *  1 task wave per shuffle: the median-of-3 probe puts 32
+   *  partitions ahead of 64 on ALL of window/agg/join at 10M rows
+   *  (window 0.75 vs 1.05 s, agg 0.90 vs 1.01, join 1.10 vs 1.19 —
+   *  the earlier "2 waves faster" note was single-trial noise); AQE
+   *  still coalesces the small sf0.1 shuffles. */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = Graft.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val rows = args.headOption.fold(BenchRows.all)(BenchRows.select)
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 1 task wave per shuffle: the median-of-3 probe puts 32
-      // partitions ahead of 64 on ALL of window/agg/join at 10M rows
-      // (window 0.75 vs 1.05 s, agg 0.90 vs 1.01, join 1.10 vs 1.19 —
-      // the earlier "2 waves faster" note was single-trial noise);
-      // AQE still coalesces the small sf0.1 shuffles
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.install(spark)
-
-    // headline set: relational + spatial + pipeline, all scale-critical
-    val headline = Seq(
-      "q1_agg", "q_join_revenue", "q_window_rank", "q_events_hourly",
-      "q_geo_contains", "q_geo_envelope", "q_geo_spatial_join",
-      "q_geo_knn", "q_geo_hilbert", "q_geo_transform",
-      "q_doc_dedup_exact", "q_doc_minhash_dedup", "q_doc_dup_clusters",
-      "q_doc_pii", "q_doc_contamination", "q_emb_topk", "q_emb_norm",
-      "q_emb_ivf_topk", "q_emb_pq", "q_emb_ivfpq")
-
-    // warmup: JIT + whole-stage-codegen compilation per plan shape on a
-    // tiny slice (not timed) — measured numbers reflect steady state
-    headline.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
-
-    def time(body: => Long): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = session(cpus)
+    val env = BenchEnv(spark, sfDir)
 
     // ---- shared run state --------------------------------------------
     // Mutated by the workload/oracle/confirmation phases below, read by
@@ -299,10 +285,6 @@ object Bench {
     val retried = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     // workloads the budget guard refused to launch
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
-    // names of every oracle-backed row (set once the oracle SQL map is
-    // assembled below; the grading line's "ungraded" list needs it and
-    // the emergency hook can fire before that point)
-    var allOraclesKeys: Set[String] = Set.empty
 
     // ---- wall-clock budget guard (r14 lesson) ------------------------
     // The graded r14 run was killed at the driver's wall-clock budget
@@ -339,37 +321,11 @@ object Bench {
     // individually, so the reserve only has to cover ONE pair)
     val confirmReserveS = 150.0
 
-    // per-oracle watchdog overrides (used by the oracle phase and the
-    // r_ub rendering below). minhash_10m carried a 60 s bound through
-    // r15 because its list-comprehension oracle was genuinely ~209 s;
-    // the r16 scalar reformulation (see the SQL below) runs ~36 s, so
-    // the row grades on a REAL ratio again under a 120 s watchdog.
-    // range_join_100m returns to 120 s: it timed out even at 300 (r14
-    // r_ub 0.0022), so the extra 180 s bought nothing.
+    // oracle watchdog for rows that set none (BenchRow.watchdogS
+    // overrides it per row; used by the oracle phase and the r_ub
+    // rendering below)
     val timeoutS = sys.env.getOrElse("GRAFT_ORACLE_TIMEOUT_S", "120")
-    // permanent-timeout rows (their faithful oracles are minutes-plus
-    // slow every round: the LSH near-dup pair, the 100M interval join)
-    // carry 60 s watchdogs — the r_ub only tightens (all are <=0.05
-    // even at 60) and the r15 shakedown showed their 120 s watchdogs
-    // were ~240 s of pure waiting. bpe_encode_10m left this list in
-    // r17: its oracle is reformulated below (distinct-word
-    // pre-aggregation, checksum-identical) from ~229 s to ~56 s, so
-    // the row grades on a REAL ratio under a 180 s watchdog.
-    val timeoutAlways = Seq("q_doc_minhash_dedup",
-      "q_doc_dup_clusters", "range_join_100m").map(_ -> "60")
-    // minhash_10m's oracle is a real ~36 s since the r16 scalar
-    // reformulation (was ~209 s, r_ub-only) — 120 s covers a loaded
-    // box. r17 trims: asof_join_100m's oracle measures 25-45 s, its
-    // 300 s watchdog bought only worst-case wait (180 still covers a
-    // 4x-slower box); dedup_exact_100m (~60-110 s) and
-    // spatial_join_100m (~90 s local) keep 300 — both were ungraded
-    // or near the bound on the r16 driver box. ivf_topk_10m gets an
-    // explicit 180 (its r16 driver oracle errored; the reformulated
-    // one below runs ~30 s local but the driver box is slower).
-    val oracleTimeouts = Map(
-      "asof_join_100m" -> "180", "dedup_exact_100m" -> "300",
-      "minhash_10m" -> "120", "spatial_join_100m" -> "300",
-      "ivf_topk_10m" -> "180", "bpe_encode_10m" -> "180") ++ timeoutAlways
+    def timeoutOf(k: String): String = BenchRows.watchdogS(k).fold(timeoutS)(_.toString)
 
     /** The one-line artifact, rendered from the CURRENT shared state —
      *  printed once at clean completion, flushed to BENCH_partial.json
@@ -390,7 +346,7 @@ object Bench {
         else if (d == -1.0) {
           // oracle exceeded the watchdog: report the bound, not silence —
           // the engine under test finished where the oracle did not
-          val tS = oracleTimeouts.getOrElse(k, timeoutS)
+          val tS = timeoutOf(k)
           "\"" + k + "\":" + f"""{"s":$v%.3f,"d":-1,"timeout_s":$tS%s,"r_ub":${v / tS.toDouble}%.4f}"""
         }
         else
@@ -432,8 +388,9 @@ object Bench {
      *  JSON line still gets a well-formed bench record. */
     def renderGrading(partial: Boolean): String = stateLock.synchronized {
       val body = gradingBody(results.toSeq, duck.toMap,
-        k => oracleTimeouts.getOrElse(k, timeoutS).toDouble,
-        allOraclesKeys, headline.toSet, skipped.toSeq, partial, sfDir)
+        k => timeoutOf(k).toDouble,
+        BenchRows.all.filter(_.oracle.isDefined).map(_.name).toSet,
+        BenchRows.headline.map(_.name).toSet, skipped.toSeq, partial, sfDir)
       // pad so line length + the sbt epilogue exceed the driver's tail
       // window — truncation then eats pad characters, never fields
       val pad = "." * math.max(1, 2200 - body.length - 12)
@@ -480,8 +437,7 @@ object Bench {
     // but a single cold run would let one machine noise burst own the
     // row (the round-5 4M-pair lesson) — so they run median-of-3 with
     // the same burst rejection up to a 60 s wall-clock bound per trial.
-    def medianOf(name: String, run: () => Double,
-        cutoff: Double = 5.0, trialsN: Int = 0): Double = {
+    def medianOf(name: String, run: () => Double, cutoff: Double, trialsN: Int): Double = {
       val nTrials = if (trialsN > 0) trialsN else trials
       // start marker on stderr: if a run dies mid-bench (OOM, kill),
       // the log shows WHICH workload owned the final stages
@@ -553,8 +509,22 @@ object Bench {
     // warnings appear even in green runs — and the uncaught
     // SparkOutOfMemoryError destroyed the WHOLE artifact): one row's
     // failure records -3 for that row and the run continues.
-    def bench(name: String, run: () => Double,
-        cutoff: Double = 5.0, trialsN: Int = 0): Unit = {
+    // a row's conf overrides hold for its fixture and each trial only
+    def withConf[T](conf: Map[String, String])(body: => T): T = {
+      val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    // every timed workload goes through this wrapper so the
+    // confirmation pass can re-run any row later in the session.
+    // Crash isolation (r14: strings_100m_sql tipped over the Tungsten
+    // memory edge it always rides — "Failed to allocate a page"
+    // warnings appear even in green runs — and the uncaught
+    // SparkOutOfMemoryError destroyed the WHOLE artifact): one row's
+    // failure records -3 for that row and the run continues.
+    def bench(row: BenchRow): Unit = {
+      val name = row.name
       // budget guard: past the Spark-phase deadline, launching another
       // workload would eat the oracle/confirmation reserve — record the
       // skip honestly and move on (the artifact lists every skip)
@@ -563,1228 +533,47 @@ object Bench {
         stateLock.synchronized { skipped += name }
         return
       }
-      val safe = () => try run() catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name: FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
-          -3.0
+      withConf(row.conf)(row.fixture.foreach(_.build(env)))
+      var checksum = 0L
+      val safe = () => withConf(row.conf) {
+        try {
+          val t0 = System.nanoTime()
+          checksum = row.kernel(env)
+          (System.nanoTime() - t0) / 1e9
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name: FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
+            -3.0
+        }
       }
-      val v = medianOf(name, safe, cutoff, trialsN)
-      stateLock.synchronized { runners(name) = safe; results(name) = v }
+      val v = if (row.once) safe() else medianOf(name, safe, row.cutoff, row.trials)
+      System.err.println(f"[bench] $name: $v%.3f s, checksum $checksum")
+      stateLock.synchronized { if (!row.once) runners(name) = safe; results(name) = v }
       flushPartial()
     }
-    headline.foreach { name =>
-      def run(): Double = time {
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1L }
-      }
-      bench(name, () => run())
-    }
+    rows.foreach(bench)
 
-    // reference rtree_points workload: 10M uniform points in [0,10000]^2,
-    // count within envelope (450,450)-(650,650). Spark-first plan: the
-    // filter is pure arithmetic over a generated range — no index needed,
-    // the scan parallelizes over 10M/partitions rows.
-    import graft.GeoFunctions._
-    def genPts(n: Long) = spark.range(n).select(
-      st_point(pmod(hash(col("id") * 2), lit(10000000)).cast("double") / 1000.0,
-        pmod(hash(col("id") * 2 + 1), lit(10000000)).cast("double") / 1000.0).as("geom"))
-    def envCount(n: Long): Long =
-      genPts(n).filter(st_within(col("geom"),
-        st_makeenvelope(lit(450.0), lit(450.0), lit(650.0), lit(650.0)))).count()
-    // warm the plan shape at 1/10 size (JIT + whole-stage codegen of the
-    // st_point/st_within kernels — the same steady state the oracle's
-    // warm run measures), then time the full workload
-    envCount(1000000L); envCount(1000000L)
-    bench("points_envelope_10m",
-      () => time { envCount(10000000L) })
-
-    // the reference's rtree_points_index A/B analog: build the
-    // Hilbert-clustered + bbox'd table (= CREATE INDEX), then run the
-    // same envelope count with bbox data skipping (files with
-    // non-overlapping hilbert ranges -> parquet row-group pruning)
-    val clusteredPath = "/tmp/graft-bench-points-clustered"
-    def clusterWrite(n: Long, path: String, files: Int): Unit =
-      graft.sources.GeoTable.writeClustered(genPts(n), "geom", path,
-        (0.0, 0.0, 10000.0, 10000.0), numFiles = files)
-    clusterWrite(500000L, clusteredPath + "-warm", 4) // warm writer path
-    bench("points_clustered_write_10m",
-      () => time { clusterWrite(10000000L, clusteredPath, 64); 1L })
-    def clusteredCount(path: String): Long =
-      spark.read.parquet(path)
-        .filter(st_within(col("geom"),
-          st_makeenvelope(lit(450.0), lit(450.0), lit(650.0), lit(650.0)))).count()
-    clusteredCount(clusteredPath + "-warm") // warm pruned-scan plan shape
-    bench("points_envelope_10m_clustered",
-      () => time { clusteredCount(clusteredPath) })
-
-    // same workload on the native POINT_2D tier (struct columns, pure
-    // codegen arithmetic — reference's columnar layout motivation,
-    // docs/internals.md "Multi-tiered Geometry Type System")
-    def nativeCount(n: Long): Long = {
-      val pts = spark.range(n).select(struct(
-        (pmod(hash(col("id") * 2), lit(10000000)).cast("double") / 1000.0).as("x"),
-        (pmod(hash(col("id") * 2 + 1), lit(10000000)).cast("double") / 1000.0).as("y")).as("pt"))
-      pts.filter(col("pt.x") > 450.0 && col("pt.x") < 650.0 &&
-        col("pt.y") > 450.0 && col("pt.y") < 650.0).count()
-    }
-    nativeCount(1000000L) // warm
-    // Z-order data-skipping A/B — the non-spatial twin of the
-    // points_envelope clustered pair (and the scale proof for the r14
-    // ZOrder writer): 100M rows with two independent hash-bucketized
-    // columns, laid out z-ordered vs plain at the SAME file count, then
-    // the same 8x8 two-column box predicate on both. The z layout puts
-    // narrow per-file min/max on BOTH columns, so parquet stats prune
-    // most files; the plain layout reads all of them. Held at 10M: the
-    // 100M variant's fixtures (two 100M-row shuffled writes) left
-    // enough session allocation debt to OOM the always-tight
-    // window_100m_sql row later in the run — the same 8g-session debt
-    // class as r14's norm_20m, and a crashed artifact costs more than
-    // a bigger A/B spread is worth. The signal is the PAIR (neither
-    // side has a DuckDB row — the generated scan substrate is already
-    // graded by points_envelope_10m_sql).
-    locally {
-      import graft.operators.ZOrder
-      def zRows(n: Long) = spark.range(n).selectExpr("id",
-        "CAST(pmod(hash(id), 1024) AS BIGINT) AS a",
-        "CAST(pmod(hash(id * 7 + 1), 1024) AS BIGINT) AS b")
-      val zDir = "/tmp/graft-bench-zorder"
-      val zPlain = "/tmp/graft-bench-zorder-plain"
-      ZOrder.writeZOrdered(zRows(500000L), Seq(col("a"), col("b")),
-        zDir + "-warm", bitsPerCol = 10, numFiles = 4) // warm writer path
-      bench("zorder_write_10m", () => time {
-        ZOrder.writeZOrdered(zRows(10000000L), Seq(col("a"), col("b")),
-          zDir, bitsPerCol = 10, numFiles = 64); 1L
-      }, cutoff = 30.0, trialsN = 3)
-      zRows(10000000L).repartition(64).write.mode("overwrite").parquet(zPlain) // fixture: NOT timed
-      def boxCount(path: String): Long =
-        spark.read.parquet(path).filter(
-          col("a").between(96L, 103L) && col("b").between(200L, 207L)).count()
-      boxCount(zDir + "-warm") // warm pruned-scan plan shape
-      bench("zorder_scan_10m", () => time { boxCount(zDir) })
-      bench("zorder_scan_10m_plain", () => time { boxCount(zPlain) })
-    }
-
-    // Clustered-join file-pruning A/B (r16 — the distributed analog of
-    // the reference's index-nested-loop join, rtree_index_plan_scan
-    // .cpp:33-246, at bench scale): 10M Hilbert-clustered points over
-    // [0,100]^2 joined to 100k small zones confined to [0,10]^2 (1% of
-    // the area). The clustered variant intersects the two tables'
-    // per-file footer bbox stats and scans only the point files whose
-    // extent touches the zone band; the plain variant runs the SAME
-    // grid join over the full scan. Identical results — the pair is
-    // the signal (no DuckDB row; the grid join itself is oracle-graded
-    // by spatial_join_10m/100m).
-    locally {
-      import graft.operators.SpatialJoin
-      val pDir = "/tmp/graft-bench-cljoin-pts"
-      val zDir2 = "/tmp/graft-bench-cljoin-zones"
-      def cjPts(n: Long) = spark.range(n).select(col("id"),
-        st_point(pmod(hash(col("id") * 2), lit(1000000)).cast("double") / 10000.0,
-          pmod(hash(col("id") * 2 + 1), lit(1000000)).cast("double") / 10000.0).as("geom"))
-      def cjZones(n: Long) = spark.range(n).select(col("id").as("zid"),
-        st_makeenvelope(
-          (col("id") % 316).cast("double") * 0.0316,
-          (col("id") / 316).cast("double") * 0.0316,
-          (col("id") % 316).cast("double") * 0.0316 + 0.02,
-          (col("id") / 316).cast("double") * 0.0316 + 0.02).as("geom"))
-      // fixtures: NOT timed
-      graft.sources.GeoTable.writeClustered(cjPts(10000000L), "geom", pDir,
-        (0.0, 0.0, 100.1, 100.1), numFiles = 64)
-      graft.sources.GeoTable.writeClustered(cjZones(100000L), "geom", zDir2,
-        (0.0, 0.0, 10.1, 10.1), numFiles = 4)
-      def clusteredJoinCount(): Long =
-        SpatialJoin.joinClustered(spark, pDir, zDir2,
-          leftSelect = Seq("id", "geom AS pgeom"),
-          rightSelect = Seq("zid", "geom AS zgeom"),
-          predicate = "st_intersects", cellSize = 0.1).count()
-      def plainJoinCount(): Long =
-        SpatialJoin.join(
-          spark.read.parquet(pDir).select(col("id"), col("geom").as("pgeom")),
-          spark.read.parquet(zDir2).select(col("zid"), col("geom").as("zgeom")),
-          col("pgeom"), col("zgeom"), "st_intersects", cellSize = 0.1).count()
-      val nClustered = clusteredJoinCount() // warm plan shapes + sanity
-      val nPlain = plainJoinCount()
-      require(nClustered == nPlain && nClustered > 0,
-        s"clustered-join A/B drift: clustered=$nClustered plain=$nPlain")
-      bench("spatial_join_clustered_10m",
-        () => time { clusteredJoinCount() }, cutoff = 30.0, trialsN = 3)
-      bench("spatial_join_plain_10m",
-        () => time { plainJoinCount() }, cutoff = 30.0, trialsN = 3)
-    }
-
-    bench("points_envelope_10m_native",
-      () => time { nativeCount(10000000L) })
-
-    // Skew-survival A/B (closes the round-4 unproven 100x-scale claim):
-    // the same 2M-point grid spatial join, uniform vs 30% of points in
-    // ONE cell. OptimizeSkewedJoin thresholds are scaled to the workload
-    // (cluster defaults assume 256MB partitions) so the hot variant
-    // exercises the same AQE split path a 1000-executor job relies on.
-    // The signal is the PAIR: hot staying in the same wall-clock regime
-    // as uniform instead of a one-straggler profile.
-    {
-      val skewKeys = Seq(
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val saved = skewKeys.map(k => k -> scala.util.Try(spark.conf.get(k)).toOption)
-      spark.conf.set(skewKeys(0), "1.5")
-      spark.conf.set(skewKeys(1), (8L << 20).toString)
-      spark.conf.set(skewKeys(2), (4L << 20).toString)
-      spark.conf.set(skewKeys(3), "-1") // force the shuffled-join path
-      def skewPts(hot: Boolean, n: Long) = spark.range(n).select(col("id"),
-        st_point(
-          when(lit(hot) && col("id") % 10 < 3, lit(10.5))
-            .otherwise(pmod(hash(col("id") * 2), lit(1000000)).cast("double") / 10000.0),
-          when(lit(hot) && col("id") % 10 < 3, lit(10.5))
-            .otherwise(pmod(hash(col("id") * 2 + 1), lit(1000000)).cast("double") / 10000.0)).as("pt"))
-      val skewZones = spark.range(25).select(col("id").as("zid"),
-        st_makeenvelope(expr("CAST(id % 5 * 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 AS DOUBLE)"),
-          expr("CAST(id % 5 * 20 + 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 + 20 AS DOUBLE)")).as("zone"))
-      def skewJoin(hot: Boolean, n: Long): Long =
-        graft.operators.SpatialJoin.join(skewPts(hot, n), skewZones,
-            col("pt"), col("zone"), "st_within", cellSize = 20.0)
-          .groupBy("zid").count().count()
-      skewJoin(hot = false, 400000L); skewJoin(hot = true, 400000L) // warm
-      // 2M keeps the cold run under the 5s single-trial cutoff, so the
-      // A/B pair gets the full median + burst-rejection protocol (the
-      // 4M variant ran once cold and a machine burst could own the row)
-      bench("spatial_join_uniform_2m",
-        () => time { skewJoin(hot = false, 2000000L) })
-      bench("spatial_join_hot30_2m",
-        () => time { skewJoin(hot = true, 2000000L) })
-      saved.foreach { case (k, v) => v match {
-        case Some(x) => spark.conf.set(k, x); case None => spark.conf.unset(k) } }
-    }
-
-    // Bucketed-layout analog of the reference's clustered fact storage:
-    // one-time write of both fact tables bucketed+sorted by orderkey,
-    // then the q_join_revenue aggregation with the fact-fact shuffle
-    // gone (dims still broadcast). At 1000-executor scale the
-    // lineitem<->orders Exchange is the dominant cost of the star join;
-    // the bucketed layout removes it entirely — amortized over every
-    // subsequent orderkey join, like the reference's index build.
-    val bwh = "/tmp/graft-bench-bucketed"
-    // one-time layout build: a single trial is the honest number (the
-    // amortization argument is the whole point of the workload)
-    val bucketedWriteT = time {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").write.mode("overwrite")
-        .option("path", s"$bwh/lineitem_b").bucketBy(32, "l_orderkey")
-        .sortBy("l_orderkey").saveAsTable("lineitem_b")
-      spark.read.parquet(s"$sfDir/orders.parquet").write.mode("overwrite")
-        .option("path", s"$bwh/orders_b").bucketBy(32, "o_orderkey")
-        .sortBy("o_orderkey").saveAsTable("orders_b")
-      1L
-    }
-    stateLock.synchronized { results("revenue_bucketed_write") = bucketedWriteT }
-    def revenueBucketed(): Long = {
-      spark.read.parquet(s"$sfDir/customer.parquet").createOrReplaceTempView("customer_v")
-      spark.read.parquet(s"$sfDir/nation.parquet").createOrReplaceTempView("nation_v")
-      spark.sql(
-        """SELECT n_name,
-           sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS revenue_c4,
-           count(*) AS n_items
-           FROM customer_v JOIN nation_v ON c_nationkey = n_nationkey
-             JOIN orders_b ON o_custkey = c_custkey
-             JOIN lineitem_b ON l_orderkey = o_orderkey
-           GROUP BY n_name ORDER BY n_name""").count()
-    }
-    revenueBucketed() // warm, same protocol as every other workload
-    bench("q_join_revenue_bucketed",
-      () => time { revenueBucketed() })
-
-    // Oracle-engine (DuckDB) timings for the same headline queries at the
-    // same sf, via the driver-side python3+duckdb that also powers the
-    // correctness gate. Measurement harness only — the engine under test
-    // never links duckdb. Missing python/duckdb degrades to spark-only.
-    // The big-workload entries run the SAME plain SQL on both engines
-    // (row generation + arithmetic filter), so unlike the sf0.1
-    // headline queries they are not dominated by Spark's fixed
-    // ~0.1-0.4 s per-query floor — that floor is amortized at real
-    // data sizes, which is what these measure.
-    // identical VALUES on both engines (engine hash() functions differ,
-    // so the generator is a shared Lehmer LCG in exact BIGINT range)
-    def bigSqlFor(idCol: String): String =
-      s"""SELECT count(*) FROM (
-           SELECT (($idCol * 2 + 1) * 48271 % 2147483647) / 214748.3647 AS x,
-                  (($idCol * 2 + 7) * 16807 % 2147483647) / 214748.3647 AS y
-           FROM range(10000000))
-         WHERE x BETWEEN 4500.0 AND 6500.0 AND y BETWEEN 4500.0 AND 6500.0"""
-    // substrate at amortized scale: join / high-cardinality agg / window
-    // over 10M generated rows, same SQL on both engines — the workloads
-    // where the 2x-of-baseline gate is actually measurable
-    def bigJoinFor(idCol: String): String =
-      s"""SELECT count(*) AS n, sum(cnt) AS s FROM (
-           SELECT a.k, count(*) AS cnt
-           FROM (SELECT $idCol % 1000000 AS k FROM range(10000000)) a
-           JOIN (SELECT $idCol % 1000000 AS k FROM range(1000000)) b ON a.k = b.k
-           GROUP BY a.k) t"""
-    def bigAggNFor(idCol: String, n: Long): String =
-      s"""SELECT count(*) AS n FROM (
-           SELECT $idCol % 1000000 AS k, sum($idCol * 2654435761 % 97) AS v
-           FROM range($n) GROUP BY k) t"""
-    def bigAggFor(idCol: String): String = bigAggNFor(idCol, 10000000L)
-    def bigWindowNFor(idCol: String, n: Long): String =
-      s"""SELECT count(*) AS n FROM (
-           SELECT $idCol AS i, row_number() OVER (PARTITION BY $idCol % 100000 ORDER BY $idCol DESC) AS rn
-           FROM range($n)) t WHERE rn <= 3"""
-    def bigWindowFor(idCol: String): String = bigWindowNFor(idCol, 10000000L)
-    // string kernels (what the text-pipeline operators lean on) at the
-    // amortized scale; replace/upper/length have identical semantics in
-    // both dialects
-    def bigStringsNFor(idCol: String, n: Long): String =
-      s"""SELECT count(*) AS n, sum(length(replace(upper(t), 'A', ''))) AS s FROM (
-           SELECT 'doc ' || CAST($idCol % 99991 AS STRING) || ' alpha beta gamma delta epsilon' AS t
-           FROM range($n))"""
-    def bigStringsFor(idCol: String): String = bigStringsNFor(idCol, 10000000L)
-    val bigPairs = Seq(
-      "points_envelope_10m_sql" -> (bigSqlFor("id"), bigSqlFor("range")),
-      "join_10m_sql" -> (bigJoinFor("id"), bigJoinFor("range")),
-      "agg_10m_sql" -> (bigAggFor("id"), bigAggFor("range")),
-      // window_10m_sql OVERHEAD EXEMPTION (r16, profiled): the plan is
-      // already the optimal shape — Spark inserts a map-side partial
-      // WindowGroupLimit before the exchange — but with 100k groups
-      // over 10M rows each of 32 partitions holds ~3 rows/group, so a
-      // k=3 partial limit prunes nothing by construction; the residual
-      // 1.0-1.3x is Spark's job floor (a bare count over range(10M)
-      // measures 0.31 s of the 0.71 s total) vs DuckDB in-process at
-      // 0.475 s. The 100M twin at ~0.3x is the operator's real grade.
-      "window_10m_sql" -> (bigWindowFor("id"), bigWindowFor("range")),
-      "strings_10m_sql" -> (bigStringsFor("id"), bigStringsFor("range")),
-      // 10x scale-up of the two cheapest kernels: shows the 10M ratios
-      // holding as the working set outgrows any one cache tier (the
-      // median protocol is unchanged; the oracle's >5 s cold run
-      // reports single-trial per the documented rule)
-      "agg_100m_sql" -> (bigAggNFor("id", 100000000L), bigAggNFor("range", 100000000L)),
-      "strings_100m_sql" -> (bigStringsNFor("id", 100000000L), bigStringsNFor("range", 100000000L)),
-      "window_100m_sql" -> (bigWindowNFor("id", 100000000L), bigWindowNFor("range", 100000000L)))
-    val bigWorkloads = bigPairs.map { case (n, (_, duckSql)) => n -> duckSql }.toMap
-    bigPairs.foreach { case (name, (sparkSql, _)) =>
-      spark.sql(sparkSql).collect() // warm (codegen compile), matching the oracle's warm run
-      // all amortized rows use the wide protocol (cutoff high enough
-      // that a contended-but-real run still gets median-of-3 instead of
-      // the single-trial path — the round-6 points_envelope lesson)
-      val wide = name.endsWith("100m_sql")
-      bench(name, () => time { spark.sql(sparkSql).collect(); 1L },
-        cutoff = 30.0, trialsN = if (wide) 3 else 0)
-    }
-
-    // Blocklist lexicon for the amortized AC bench: every pattern's
-    // first char differs from its last, so no pattern can overlap
-    // itself and the oracle's per-pattern replace() count (the natural
-    // engine formulation, non-overlapping) equals the automaton's
-    // all-occurrences count. Mix of prefix words (hit every doc) and
-    // hex fragments (hit randomly).
-    val blocklistLex = Seq("quick", "brown", "fox", "abc", "bcd", "cde",
-      "def", "12e", "34f", "a0b", "c1d", "e2f", "01", "23", "45", "ab")
-
-    // ---- amortized oracle-compared operator kernels --------------------
-    // The three operators whose only oracle-compared timing was a
-    // micro row at sf0.1 (0.2-0.5 s wall, dominated by Spark's fixed
-    // scheduling floor): grid spatial join (the rides⋈zones shape of
-    // the reference's docs/example.md at 10M points), radius-bounded
-    // KNN join, and exact dedup on a 50%-duplicate corpus. Data is the
-    // shared Lehmer-LCG recipe so both engines compute over identical
-    // values; the Spark side runs the REAL operators (SpatialJoin.join
-    // / knnJoin / Dedup.exact default shuffled shape — not the
-    // broadcast micro path), the oracle runs the declaratively
-    // equivalent SQL and DuckDB plans it with its own join machinery.
-    {
-      import graft.operators.{Dedup, SpatialJoin}
-      def lcgPts(n: Long) = spark.range(n).select(col("id"),
-        st_point(expr("((id*2+1)*48271 % 2147483647)/21474836.47"),
-          expr("((id*2+7)*16807 % 2147483647)/21474836.47")).as("pt"))
-      val zones25 = spark.range(25).select(col("id").as("zid"),
-        st_makeenvelope(expr("CAST(id % 5 * 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 AS DOUBLE)"),
-          expr("CAST(id % 5 * 20 + 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 + 20 AS DOUBLE)")).as("zone"))
-      def spatialJoinN(n: Long): Long =
-        SpatialJoin.join(lcgPts(n), zones25, col("pt"), col("zone"), "st_within", cellSize = 20.0)
-          .groupBy("zid").count().agg(count(lit(1)), sum("count")).collect()(0).getLong(0)
-      def lcgQueries(n: Long) = spark.range(n).select(col("id").as("qid"),
-        st_point(expr("((id*3+11)*69621 % 2147483647)/21474836.47"),
-          expr("((id*3+17)*16807 % 2147483647)/21474836.47")).as("qpt"))
-      def knnN(nPts: Long, nQ: Long): Long =
-        SpatialJoin.knnJoin(lcgQueries(nQ), lcgPts(nPts), col("qid"), col("qpt"),
-            col("id"), col("pt"), k = 10, maxDist = 0.5, cellSize = 0.5)
-          .agg(count(lit(1)), sum("rank")).collect()(0).getLong(0)
-      def dedupN(n: Long): Long = {
-        val docs = spark.range(n).select(col("id"),
-          concat(lit("document body text "), expr(s"CAST(id % ${n / 2} AS STRING)")).as("text"))
-        Dedup.exact(docs, col("id"), col("text"))
-          .agg(count(lit(1)), sum(length(col("text")))).collect()(0).getLong(0)
-      }
-      // sequence packing: the distributed two-pass prefix scan vs the
-      // oracle's single global window cumsum over the same md5 order —
-      // the workload where the scale shape (n-way parallel scan) meets
-      // an operation engines usually serialize
-      def packN(n: Long): Long = {
-        val docs = spark.range(n).select(col("id"),
-          (lit(1) + pmod(col("id") * 37, lit(100))).as("tok"))
-        val out = graft.operators.Packing.packSequences(
-          docs, col("id"), col("tok"), budget = 2048L, seed = 1L)
-        val r = out.agg(count(lit(1)), sum("seq_id"), sum("seq_offset"))
-          .collect()(0).getLong(0)
-        out.unpersist(blocking = false)
-        r
-      }
-      // CRS transform at amortized scale: the REAL native-tier operator
-      // (TransformNative over POINT_2D structs — the q_geo_transform
-      // kernel whose only prior oracle timing was a floor-bound micro
-      // row) vs the oracle's closed-form spherical-Mercator SQL
-      def transformN(n: Long): Long =
-        spark.range(n).selectExpr(
-            """st_transform_point2d(named_struct(
-                 'x', CAST(id % 360 AS DOUBLE) - 179.5,
-                 'y', CAST(id % 160 AS DOUBLE) - 79.5),
-               'EPSG:4326', 'EPSG:3857', true) AS p""")
-          .agg(count(lit(1)), sum(col("p.x") + col("p.y"))).collect()(0).getLong(0)
-      // iterative graph workload: exact-integer PageRank, 5 power
-      // iterations over a closed-form ~10M-edge / 100k-vertex domain
-      // graph — the oracle runs the identical recurrence as 5 unrolled
-      // CTE blocks (same SQL family as the q_graph_pagerank oracle)
-      def pagerankN(n: Long, mod: Long): Long = {
-        val edges = spark.range(n).selectExpr(
-          s"id % $mod AS src", s"(id DIV $mod * 13 + id * 7 + 3) % $mod AS dst")
-        val r = graft.operators.LinkGraph.pageRankMicro(
-          edges, col("src"), col("dst"), iterations = 5)
-        val out = r.agg(count(lit(1)), sum("rank_micro")).collect()(0).getLong(0)
-        r.unpersist(blocking = false)
-        out
-      }
-      // iterative clustering workload: the exact-integer Lloyd fit
-      // (2 updates + final assign) over 1M closed-form 8-dim vectors —
-      // the oracle runs the identical unrolled recurrence with
-      // list-comprehension distances (its fastest formulation)
-      def kmeansN(n: Long): Long = {
-        val vecs = spark.range(n).selectExpr("id",
-          "transform(sequence(0, 7), d -> ((id*37 + d*11)*48271 % 1000003) / 1000003.0) AS v")
-        val (fit, _) = graft.operators.Similarity.kmeansFit(vecs, col("id"), col("v"), 8, 2)
-        val r = fit.agg(count(lit(1)), sum("cluster")).collect()(0).getLong(0)
-        fit.unpersist(blocking = false)
-        r
-      }
-      // as-of join at amortized scale: the union+running-last rewrite
-      // vs the oracle's native ASOF LEFT JOIN over identical frames
-      // (100k keys, 100 probe rows/key, 10 unique state rows/key)
-      def asofN(nL: Long, nR: Long, keys: Long): Long = {
-        val l = spark.range(nL).selectExpr("id AS lid",
-          s"id % $keys AS k", "(id * 48271 % 2147483647) % 10000 AS t")
-        val r = spark.range(nR).selectExpr(s"id % $keys AS k",
-          s"(id DIV $keys) * 1000 + (id % $keys) % 37 AS rt", "id AS amount")
-        graft.operators.AsofJoin.asofJoin(l, r, "k", "t", "rt")
-          .agg(count(lit(1)), count(col("asof_rt")),
-            sum(coalesce(col("amount"), lit(0L))))
-          .collect()(0).getLong(0)
-      }
-      // interval containment at amortized scale: the binned equi-join
-      // vs the oracle's inequality join (10M points, 10k intervals,
-      // ~6M result pairs)
-      def rangeJoinN(nP: Long, nI: Long): Long = {
-        val p = spark.range(nP).selectExpr("id AS pid",
-          "(id * 16807 % 2147483647) % 10000000 AS x")
-        val iv = spark.range(nI).selectExpr("id AS iid", "id * 9973 % 10000000 AS s")
-          .selectExpr("iid", "s", "s + 200 + iid % 800 AS e")
-        graft.operators.RangeJoin.pointInInterval(p, iv,
-            col("x"), col("s"), col("e"), binWidth = 1024L)
-          .agg(count(lit(1)), sum("x"), sum("iid")).collect()(0).getLong(0)
-      }
-      // synchronous label propagation: same closed-form domain graph as
-      // pagerank, 3 rounds — vs the oracle's identical unrolled rounds
-      def labelPropN(n: Long, mod: Long): Long = {
-        val edges = spark.range(n).selectExpr(
-          s"id % $mod AS src", s"(id DIV $mod * 13 + id * 7 + 3) % $mod AS dst")
-        val r = graft.operators.LinkGraph.labelPropagation(
-          edges, col("src"), col("dst"), rounds = 3)
-        val out = r.agg(count(lit(1)), sum("label")).collect()(0).getLong(0)
-        r.unpersist(blocking = false)
-        out
-      }
-      // BPE encode at amortized scale: md5-hex letter runs defeat the
-      // per-partition word memo (worst case — every word hits the merge
-      // loop) vs the oracle running the identical nested-replace
-      // formulation per row
-      def bpeEncodeN(n: Long): Long = {
-        val docs = spark.range(n).selectExpr("id",
-          "concat('the quick brown fox ', md5(CAST(id AS STRING))) AS text")
-        graft.operators.Bpe.encode(docs, col("id"), col("text"),
-          SparkEntry.BpeCertMerges)
-          .agg(count(lit(1)), sum(size(col("tokens")))).collect()(0).getLong(0)
-      }
-      // Hamming top-k at amortized scale: 10M 8-byte signatures read
-      // from a parquet fixture (the persisted-signature-index layout),
-      // 20 broadcast queries, bounded top-k — vs the oracle scanning
-      // the SAME parquet with xor/bit_count + row_number. The r9 row
-      // generated the corpus inline per trial (2 md5 + a 63-element
-      // hex-digit comprehension per row) — ~90% of the 31.7 s wall was
-      // fixture generation, masking any regression in the packed
-      // search kernel, so the corpus is now materialized ONCE outside
-      // the timed region and both engines read it.
-      val hammingSigPath = "/tmp/graft-bench-hamming-sigs"
-      def hammingSigWrite(n: Long, path: String): Unit = spark.range(n)
-        // md5-digit generator: every modular-affine family tried first
-        // collapsed to a handful of distinct sign patterns (all bits are
-        // thresholds of ONE per-row scalar — distances all 0); hex-digit
-        // high bits are real hash bits, so signatures are fully distinct
-        // and top-k distances realistic.
-        .selectExpr("id",
-          "concat(md5(CAST(id AS STRING)), md5(concat(CAST(id AS STRING), 'x'))) AS h")
-        .selectExpr("id",
-          "transform(sequence(1, 63), j -> instr('0123456789abcdef', substring(h, j, 1)) - 8.5) AS v")
-        .select(col("id"), graft.operators.Similarity.signSignature(col("v")).as("s"))
-        .write.mode("overwrite").parquet(path)
-      def hammingPackedN(path: String, nQ: Long): Long = {
-        val sigs = spark.read.parquet(path)
-        graft.operators.Similarity.hammingTopKPacked(
-            sigs, sigs.filter(col("id") < nQ),
-            col("id"), col("s"), col("id"), col("s"), k = 10)
-          .agg(count(lit(1)), sum("hamming"), sum("rank")).collect()(0).getLong(0)
-      }
-      // Aho-Corasick blocklist at amortized scale: ONE automaton pass
-      // per doc over the 16-pattern lexicon vs the oracle's 16
-      // replace() scans (the natural engine formulation; the lexicon is
-      // self-overlap-free so counts agree exactly)
-      def blocklistN(n: Long): Long = {
-        val docs = spark.range(n).selectExpr("id",
-          "concat('the quick brown fox ', md5(CAST(id AS STRING))) AS text")
-        graft.operators.TextOps.blocklistAccounting(docs, col("id"), col("text"), blocklistLex)
-          .agg(count(lit(1)), sum("n_matches"), sum("n_pats")).collect()(0).getLong(0)
-      }
-      // Count-min build+probe at amortized scale: the engine streams
-      // the sketch over every OCCURRENCE (4 md5/row — the one-pass
-      // contract); the oracle is allowed the smarter pre-aggregated
-      // form (4 md5 per DISTINCT item, weighted by count)
-      def cmsN(n: Long, mod: Long): Long = {
-        val items = spark.range(n).selectExpr(s"concat('w', id % $mod) AS w")
-        graft.operators.Sketches.cmsAccounting(items, col("w"), depth = 4, width = 1024)
-          .agg(count(lit(1)), sum("n_exact"), sum("n_est")).collect()(0).getLong(0)
-      }
-      // HLL register build at amortized scale (registers only — the
-      // accounting wrapper's count-distinct is cert ballast, not the
-      // sketch workload): identical per-occurrence md5 derivation on
-      // both engines
-      def hllN(n: Long, mod: Long): Long = {
-        val items = spark.range(n).selectExpr(s"concat('u', id % $mod) AS w")
-        graft.operators.Sketches.hllRegisters(items, col("w"), b = 6)
-          .agg(count(lit(1)), sum("max_rank")).collect()(0).getLong(0)
-      }
-      // cosine/norm at amortized scale — the q_emb_norm/q_emb_topk
-      // kernels' missing amortized twin (the 46 ms micro row graded
-      // 9.6x of pure fixed overhead every round): 20M closed-form
-      // 8-dim float vectors, L2 norm via the aggregate lambda +
-      // CosineSimilarity against one constant-folded query vector.
-      // Identical double op order on both engines (float element
-      // loads, index-order accumulation, dot/(sqrt·sqrt)), so the
-      // per-row micro-rounded exact BIGINT checksums match.
-      def normN(n: Long): Long = {
-        val vecs = spark.range(n).selectExpr(
-          "transform(sequence(0, 7), d -> CAST(CAST((id*37 + d*11)*48271 % 1000003 AS DOUBLE) / 1000003.0 AS FLOAT)) AS v")
-        vecs.select(
-            expr("sqrt(aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))").as("l2"),
-            graft.operators.Similarity.cosine(col("v"),
-              expr("transform(sequence(0, 7), d -> CAST(CAST((d*97 + 13)*48271 % 1000003 AS DOUBLE) / 1000003.0 AS FLOAT))")).as("c"))
-          .agg(count(lit(1)), sum(expr("CAST(round(c * 1e6) AS BIGINT)")),
-            sum(expr("CAST(round(l2 * 1e6) AS BIGINT)")))
-          .collect()(0).getLong(0)
-      }
-      // MinHash-LSH at 10M docs — the dedup-family amortized-scale proof
-      // (minhash was previously graded only by the sf0.1 gate rows
-      // whose brute-force oracle times out): 10% planted identical
-      // pairs (every 5th family), the rest globally unique token
-      // streams (tokens are affine in `base` mod a prime larger than
-      // any base, so distinct bases can never share all tokens). BOTH
-      // engines run the identical LSH recipe — 16 minhash permutations
-      // over 3-token shingles of 6-token docs, 4 bands, bucket
-      // equi-join, distinct pairs — each with its native shingle hash
-      // (FNV-1a here, DuckDB hash() there): identical texts collide in
-      // every band under ANY minhash and unrelated texts share no
-      // shingles, so both discover exactly the planted pair set and
-      // the count/sum checksums certify cross-engine.
-      def minhashN(n: Long): Long = {
-        val docs = spark.range(n)
-          .selectExpr("id", s"CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE $n + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        val pairs = graft.operators.Dedup.minhashCandidates(docs, col("id"), col("text"),
-          numHashes = 16, bands = 4, shingleSize = 3)
-        // signature-estimate verify (>= 15/16 agreeing positions): kills
-        // the rare band-level false candidates from 32-bit shingle-hash
-        // birthday collisions, so both engines report EXACTLY the
-        // planted pair set (planted pairs have identical signatures)
-        val out = pairs.filter(col("est_jaccard") >= 0.9)
-          .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
-          .collect()(0).getLong(0)
-        pairs.unpersist(blocking = false)
-        out
-      }
-      // DSIR data selection at amortized scale: the REAL two-pass
-      // operator (fit bucket-agg + broadcast-apply + Gumbel top-k) on
-      // 1M synthetic docs × 11 hashed features each — both engines pay
-      // the same md5 featurization twice (fit and apply)
-      def dsirN(n: Long): Long = {
-        val docs = spark.range(n).selectExpr("id",
-          "concat('alpha w', CAST(id % 997 AS STRING), ' beta w', " +
-            "CAST((id*7+3) % 997 AS STRING), ' gamma w', " +
-            "CAST((id*13+11) % 997 AS STRING)) AS text",
-          "id % 20 = 0 AS tgt")
-        graft.operators.Sampling.dsirSelect(docs, col("id"), col("text"),
-            col("tgt"), k = 1000, buckets = 1024)
-          .agg(count(lit(1)), sum("key_micro")).collect()(0).getLong(0)
-      }
-      spatialJoinN(1000000L); knnN(1000000L, 100L); dedupN(1000000L); packN(1000000L)
-      transformN(1000000L); pagerankN(1000000L, 10000L); kmeansN(100000L)
-      asofN(1000000L, 100000L, 10000L); rangeJoinN(1000000L, 1000L)
-      bpeEncodeN(1000000L)
-      hammingSigWrite(1000000L, hammingSigPath + "-warm")
-      hammingPackedN(hammingSigPath + "-warm", 5L) // warm packed-search plan
-      hammingSigWrite(10000000L, hammingSigPath)   // fixture: NOT timed
-      blocklistN(1000000L); cmsN(1000000L, 100000L); hllN(1000000L, 100000L)
-      dsirN(100000L) // warm the dsir plan shapes
-      labelPropN(1000000L, 10000L) // warm plan shapes
-      normN(1000000L); minhashN(1000000L) // warm plan shapes
-      bench("spatial_join_10m",
-        () => time { spatialJoinN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("transform_10m",
-        () => time { transformN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("knn_join_10m",
-        () => time { knnN(10000000L, 1000L) }, cutoff = 30.0, trialsN = 3)
-      bench("dedup_exact_10m",
-        () => time { dedupN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("pack_10m",
-        () => time { packN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("pagerank_10m",
-        () => time { pagerankN(10000000L, 100000L) }, cutoff = 60.0, trialsN = 3)
-      bench("kmeans_1m",
-        () => time { kmeansN(1000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("asof_join_10m",
-        () => time { asofN(10000000L, 1000000L, 100000L) }, cutoff = 30.0, trialsN = 3)
-      bench("range_join_10m",
-        () => time { rangeJoinN(10000000L, 10000L) }, cutoff = 30.0, trialsN = 3)
-      // 10x scale-up of the two newest kernels (the agg/strings/window
-      // families already carry 100m rows): identical recipes, 100M
-      // probes — asof stays ONE exchange + in-partition sort (now
-      // behind the skew-sampling dispatch, which the timing includes:
-      // it's the default entry point); range join's shuffle grows
-      // linearly in points while the interval side is unchanged
-      bench("asof_join_100m",
-        () => time { asofN(100000000L, 1000000L, 100000L) }, cutoff = 60.0, trialsN = 3)
-      // the dedup family at true 100m scale: no operator-side cache
-      // (partial-agg min-id + semi-join only), so unlike minhash this
-      // row fits the shared heap at 100M rows
-      bench("dedup_exact_100m",
-        () => time { dedupN(100000000L) }, cutoff = 120.0, trialsN = 3)
-      bench("range_join_100m",
-        () => time { rangeJoinN(100000000L, 10000L) }, cutoff = 60.0, trialsN = 3)
-      bench("labelprop_10m",
-        () => time { labelPropN(10000000L, 100000L) }, cutoff = 60.0, trialsN = 3)
-      bench("bpe_encode_10m",
-        () => time { bpeEncodeN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("hamming_topk_10m",
-        // 8 probes (not 20): the oracle's LATERAL does one full corpus
-        // pass PER probe — 20 passes brushed the 120 s watchdog under
-        // bench-box load, and a timed-out oracle hides regressions
-        () => time { hammingPackedN(hammingSigPath, 8L) }, cutoff = 30.0, trialsN = 3)
-      bench("blocklist_10m",
-        () => time { blocklistN(10000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("cms_10m",
-        () => time { cmsN(10000000L, 100000L) }, cutoff = 30.0, trialsN = 3)
-      // cms at 2x scale (r16): cms_10m is the widest driver/local
-      // disagreement in the r15 artifact (1.40x vs 0.61x on a sub-3 s
-      // row) — an amortized twin where the sketch's map-side merge
-      // dominates de-noises the signal the way minhash_20m did for LSH
-      bench("cms_20m",
-        () => time { cmsN(20000000L, 100000L) }, cutoff = 60.0, trialsN = 3)
-      bench("hll_10m",
-        () => time { hllN(10000000L, 1000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("dsir_1m",
-        () => time { dsirN(1000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("norm_20m",
-        () => time { normN(20000000L) }, cutoff = 30.0, trialsN = 3)
-      bench("minhash_10m",
-        () => time { minhashN(10000000L) }, cutoff = 120.0, trialsN = 3)
-      // minhash at TRUE 20M — the r14 judge ask. The r14 session OOM
-      // was the persisted signature cache (20M x 16 longs + overhead);
-      // signatures are now array<int> (every minhash value is mod
-      // 2^31-1 by construction), halving the cache. The planted-set
-      // require IS the checksum: LSH must find exactly the n/10
-      // planted identical pairs (sig-verify kills band-collision false
-      // positives), so a pass certifies the kernel's output at 20M,
-      // not just its wall-clock. No oracle row: the faithful DuckDB
-      // LSH oracle is ~209 s at 10M alone (the r14 budget-kill's
-      // biggest line item) — the ratio evidence is minhash_10m's r_ub
-      // plus this row's Spark-side linearity vs 10M.
-      bench("minhash_20m",
-        () => time {
-          val pairs = minhashN(20000000L)
-          require(pairs == 2000000L, s"minhash_20m planted-set drift: $pairs")
-          1L
-        }, cutoff = 30.0, trialsN = 3)
-      // IVF top-k at amortized scale: q_emb_ivf_topk reads 1.77x every
-      // round at 0.7 s total — fixed-overhead territory. The same REAL
-      // operator (ivfTopK: broadcast centroid argmax assignment,
-      // bounded top-k agg) over 10M closed-form 8-dim vectors settles
-      // whether that number is overhead or kernel. 8 centroids /
-      // 8 queries / nprobe 2 — the candidate set is ~20M scored pairs.
-      def ivfVecSql(idExpr: String): String =
-        {
-        // w -> w*(w+13) mod P: NONLINEAR in d. A recipe linear in d makes
-        // every same-slope vector an arithmetic progression -- all
-        // cosines crowd 1.000000 and ties decide the ranking
-        def w = s"((($idExpr)*37 + d*11)*48271 % 1000003)"
-        s"transform(sequence(0, 7), d -> CAST($w * ($w + 13) % 1000003 AS DOUBLE) / 1000003.0)"
-      }
-      def ivfN(n: Long, nCent: Long, nQ: Long, nprobe: Int): Long = {
-        val corpus = spark.range(n).selectExpr("id", s"${ivfVecSql("id")} AS v")
-        val cents = spark.range(nCent).selectExpr("id AS cid", s"${ivfVecSql("id*1237 + 101")} AS cv")
-        val qs = spark.range(nQ).selectExpr("id AS qid", s"${ivfVecSql("id*7717 + 3")} AS qv")
-        graft.operators.Similarity.ivfTopK(corpus, qs, cents,
-            col("id"), col("v"), col("qid"), col("qv"), col("cid"), col("cv"),
-            k = 10, nprobe = nprobe)
-          .agg(count(lit(1)), sum("corpus_id"),
-            sum(expr("CAST(round(cosine * 1e6, 0) AS BIGINT)")))
-          .collect()(0).getLong(0)
-      }
-      ivfN(1000000L, 8L, 8L, 2) // warm plan shapes
-      bench("ivf_topk_10m",
-        () => time { ivfN(10000000L, 8L, 8L, 2) }, cutoff = 30.0, trialsN = 3)
-      // the grid spatial join at TRUE 100M points — the reference's
-      // rtree benchmark shape at 10x, making the 10M row's 100x-scale
-      // claim empirical (same operator, same 25-zone grid; the shuffle
-      // grows linearly in points). The oracle runs the identical SQL
-      // under a 300 s watchdog — an r_ub bound plus the Spark-side
-      // linearity vs spatial_join_10m is the graded evidence either way.
-      bench("spatial_join_100m",
-        () => time { spatialJoinN(100000000L) }, cutoff = 30.0, trialsN = 3)
-    }
-    val pagerankOracle10m: String = {
-      val iters = (1 to 5).map { i =>
-        s"""r$i AS (
-             SELECT v.v,
-               CAST(150000000 + (85 * coalesce(s.insum, 0)) // 100 AS BIGINT) AS r
-             FROM v LEFT JOIN (
-               SELECT e.dst AS v, sum(r.r // d.deg) AS insum
-               FROM r${i - 1} r JOIN deg d ON r.v = d.src JOIN e ON e.src = d.src
-               GROUP BY e.dst) s ON v.v = s.v)"""
-      }.mkString(",\n           ")
-      s"""WITH e AS (
-           SELECT DISTINCT range % 100000 AS src,
-             (range // 100000 * 13 + range * 7 + 3) % 100000 AS dst
-           FROM range(10000000)
-           WHERE range % 100000 <> (range // 100000 * 13 + range * 7 + 3) % 100000),
-         deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-         v AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-         r0 AS (SELECT v, CAST(1000000000 AS BIGINT) AS r FROM v),
-         $iters
-         SELECT count(*) AS n, sum(r) AS s FROM r5"""
-    }
-    val bpeEncodeOracle10m: String = {
-      // replace() to fixpoint per merge, one CTE per merge (see
-      // SparkEntry.bpeEncodeOracle: a single pass skips
-      // delimiter-sharing adjacent occurrences; the binder caps
-      // expression nesting at 128; exact only for a != b merges —
-      // the shared require below enforces it).
-      // r17 reformulation (the same move that gave minhash_10m a real
-      // ratio in r16): the merge chain runs over DISTINCT words with
-      // occurrence counts — BPE tokenization is a pure word function,
-      // and the 10M-doc corpus holds only ~209k distinct words (4
-      // fixed + the [a-f] letter runs of the md5 hex), so the
-      // quadratic replace() tail shrinks ~300x. s = sum over words of
-      // tokens(word) * occurrences(word) is term-for-term the old
-      // per-doc sum regrouped; n = count of docs with >=1 word = all
-      // docs (every text begins with the constant 4-word prefix).
-      // Checksum-pinned vs the old formulation at 100k and 10M rows:
-      // (10000000, 259997015) — the old oracle was ~229 s (r_ub-only
-      // every round); this one measures ~56 s, a REAL ratio.
-      require(SparkEntry.BpeCertMerges.forall { case (a, b) => a != b },
-        "bpe bench oracle: identical-symbol merges are not replace()-replicable")
-      val mergeCtes = SparkEntry.BpeCertMerges.zipWithIndex.map { case ((a, b), k) =>
-        val expr = (1 to 12).foldLeft("e")((s, _) => s"replace($s, ' $a $b ', ' $a$b ')")
-        s"e${k + 1} AS (SELECT cnt, $expr AS e FROM e$k)"
-      }
-      s"""WITH docs AS (SELECT range AS id,
-              'the quick brown fox ' || md5(CAST(range AS VARCHAR)) AS text
-            FROM range(10000000)),
-          wc AS (SELECT w, count(*) AS cnt FROM (
-              SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM docs)
-            GROUP BY w),
-          e0 AS (SELECT cnt, ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS e FROM wc),
-          ${mergeCtes.mkString(",\n          ")},
-          pertok AS (SELECT cnt, length(string_split_regex(trim(e), ' +')) AS nt
-                     FROM e${SparkEntry.BpeCertMerges.length})
-          SELECT (SELECT count(*) FROM docs) AS n,
-            CAST(sum(nt * cnt) AS BIGINT) AS s FROM pertok"""
-    }
-    val labelPropOracle10m: String = {
-      def round(k: Int) =
-        s"""l$k AS (
-             SELECT v, label FROM (
-               SELECT v, label, row_number() OVER (PARTITION BY v
-                 ORDER BY n DESC, label ASC) AS rn
-               FROM (SELECT e.a AS v, l.label, count(*) AS n
-                     FROM e JOIN l${k - 1} l ON l.v = e.b GROUP BY e.a, l.label) g) t
-             WHERE rn = 1)"""
-      s"""WITH e0 AS (
-             SELECT range % 100000 AS a, (range // 100000 * 13 + range * 7 + 3) % 100000 AS b
-             FROM range(10000000)
-             WHERE range % 100000 <> (range // 100000 * 13 + range * 7 + 3) % 100000),
-           e AS (SELECT DISTINCT a, b FROM (
-             SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0)),
-           l0 AS (SELECT DISTINCT a AS v, a AS label FROM e),
-           ${(1 to 3).map(round).mkString(",\n           ")}
-         SELECT count(*) AS n, CAST(sum(label) AS BIGINT) AS s FROM l3"""
-    }
-    val operatorOracles = Map(
-      // identical double op order as the Spark kernels: float element
-      // values, index-order accumulation, dot/(sqrt·sqrt)
-      "norm_20m" ->
-        """WITH v AS (
-             SELECT [CAST(((range*37 + d*11)*48271 % 1000003) / 1000003.0 AS FLOAT)
-                     for d in range(0, 8)] AS v
-             FROM range(20000000)),
-           q AS (SELECT [CAST(((d*97 + 13)*48271 % 1000003) / 1000003.0 AS FLOAT)
-                     for d in range(0, 8)] AS q),
-           s AS (
-             SELECT
-               sqrt(list_sum([(x::DOUBLE) * (x::DOUBLE) for x in v])) AS l2,
-               list_sum([(v[i]::DOUBLE) * (q[i]::DOUBLE) for i in range(1, 9)])
-                 / (sqrt(list_sum([(x::DOUBLE) * (x::DOUBLE) for x in v]))
-                    * sqrt(list_sum([(x::DOUBLE) * (x::DOUBLE) for x in q]))) AS c
-             FROM v, q)
-           SELECT count(*) AS n, CAST(sum(CAST(round(c * 1e6, 0) AS BIGINT)) AS BIGINT) AS sc,
-             CAST(sum(CAST(round(l2 * 1e6, 0) AS BIGINT)) AS BIGINT) AS sl
-           FROM s""",
-      // the identical LSH recipe with DuckDB's native shingle hash:
-      // 16 (a_k·h + b_k) mod P permutations (a_k = 48271^(k+1),
-      // b_k = 16807^(k+3) mod P — per-k pseudo-random; linearly
-      // related constants correlate argmins across k and admit false
-      // bands) over the 4 3-token shingles, 4 bands of 4, bucket
-      // equi-join, distinct pairs, >= 15/16 signature verify —
-      // discovers exactly the planted pair set (see the Spark kernel).
-      // r16: reformulated from per-row LIST COMPREHENSIONS (10M × 16×4
-      // interpreted list ops — the ~209 s oracle that forced r15's
-      // r_ub grading) to FLAT SCALAR COLUMNS (h1..h4, s1..s16 via
-      // least(), 4 UNION ALL band projections, an integer-sum verify):
-      // the same computation vectorizes to ~36 s, so the row carries a
-      // REAL ratio again. Checksum-identical to the old oracle AND the
-      // Spark kernel (n=1000000, s=9999991000000 at 10M).
-      "minhash_10m" -> {
-        val a = Seq(48271L, 182605794L, 1291394886L, 1914720637L, 2078669041L,
-          407355683L, 1105902161L, 854716505L, 564586691L, 1596680831L,
-          192302371L, 1203428207L, 1250328747L, 1738531149L, 1271135913L,
-          1098894339L)
-        val b = Seq(1622650073L, 984943658L, 1144108930L, 470211272L,
-          101027544L, 1457850878L, 1458777923L, 2007237709L, 823564440L,
-          1115438165L, 1784484492L, 74243042L, 114807987L, 1137522503L,
-          1441282327L, 16531729L)
-        val sigCols = (0 until 16).map(k => "least(" +
-          (1 to 4).map(i => s"(${a(k)}*h$i+${b(k)})%2147483647").mkString(",") +
-          s") AS s${k + 1}").mkString(",\n             ")
-        val bandSelects = (0 until 4).map(bd =>
-          s"SELECT id, $bd AS band, hash([s${4 * bd + 1},s${4 * bd + 2},s${4 * bd + 3},s${4 * bd + 4}]) AS bh FROM sig")
-          .mkString("\n             UNION ALL ")
-        val verify = (1 to 16).map(k => s"CAST(sa.s$k=sb.s$k AS INT)").mkString("+")
-        s"""WITH docs AS (
-             SELECT range AS id,
-               CASE WHEN (range // 2) % 5 = 0 THEN range // 2
-                    ELSE 10000000 + range END AS base
-             FROM range(10000000)),
-           toks AS (
-             SELECT id, base*7 % 1000000007 AS t1, (base*11+1) % 1000000007 AS t2,
-               (base*13+2) % 1000000007 AS t3, (base*17+3) % 1000000007 AS t4,
-               (base*19+4) % 1000000007 AS t5, (base*23+5) % 1000000007 AS t6
-             FROM docs),
-           sh AS (
-             SELECT id,
-               CAST(hash(CAST(t1 AS VARCHAR)||':'||CAST(t2 AS VARCHAR)||':'||CAST(t3 AS VARCHAR)) % 4294967296 AS BIGINT) AS h1,
-               CAST(hash(CAST(t2 AS VARCHAR)||':'||CAST(t3 AS VARCHAR)||':'||CAST(t4 AS VARCHAR)) % 4294967296 AS BIGINT) AS h2,
-               CAST(hash(CAST(t3 AS VARCHAR)||':'||CAST(t4 AS VARCHAR)||':'||CAST(t5 AS VARCHAR)) % 4294967296 AS BIGINT) AS h3,
-               CAST(hash(CAST(t4 AS VARCHAR)||':'||CAST(t5 AS VARCHAR)||':'||CAST(t6 AS VARCHAR)) % 4294967296 AS BIGINT) AS h4
-             FROM toks),
-           sig AS (SELECT id, $sigCols FROM sh),
-           bk AS ($bandSelects),
-           cand AS (
-             SELECT DISTINCT a.id AS id_a, b.id AS id_b
-             FROM bk a JOIN bk b ON a.band = b.band AND a.bh = b.bh AND a.id < b.id),
-           pairs AS (
-             SELECT id_a, id_b FROM cand
-             JOIN sig sa ON cand.id_a = sa.id JOIN sig sb ON cand.id_b = sb.id
-             WHERE $verify >= 15)
-           SELECT count(*) AS n, CAST(sum(id_a + id_b) AS BIGINT) AS s FROM pairs"""
-      },
-      "blocklist_10m" -> {
-        val cols = blocklistLex.zipWithIndex.map { case (p, i) =>
-          s"(length(text) - length(replace(text, '$p', ''))) // ${p.length} AS c$i"
-        }.mkString(", ")
-        val nm = blocklistLex.indices.map(i => s"c$i").mkString(" + ")
-        val np = blocklistLex.indices.map(i => s"CAST(c$i > 0 AS INT)").mkString(" + ")
-        s"""WITH docs AS (SELECT range AS id,
-                'the quick brown fox ' || md5(CAST(range AS VARCHAR)) AS text
-              FROM range(10000000)),
-            m AS (SELECT id, $cols FROM docs)
-            SELECT count(*) AS n, CAST(sum($nm) AS BIGINT) AS s,
-              CAST(sum($np) AS BIGINT) AS s2 FROM m"""
-      },
-      "cms_10m" ->
-        """WITH items AS (SELECT 'w' || CAST(range % 100000 AS VARCHAR) AS w FROM range(10000000)),
-           ex AS (SELECT w, count(*) AS ne FROM items GROUP BY w),
-           pos AS (
-             SELECT w, j.j AS j,
-               ('0x' || substring(md5(CAST(j.j AS VARCHAR) || ':' || w), 1, 8))::BIGINT % 1024 AS pos
-             FROM ex, (SELECT unnest(range(0, 4)) AS j) j),
-           cells AS (
-             SELECT p.j, p.pos, CAST(sum(e.ne) AS BIGINT) AS c
-             FROM pos p JOIN ex e ON p.w = e.w GROUP BY p.j, p.pos),
-           est AS (
-             SELECT p.w, min(c.c) AS e FROM pos p
-             JOIN cells c ON p.j = c.j AND p.pos = c.pos GROUP BY p.w)
-           SELECT count(*) AS n, CAST(sum(x.ne) AS BIGINT) AS s1,
-             CAST(sum(est.e) AS BIGINT) AS s2
-           FROM ex x JOIN est ON x.w = est.w""",
-      // identical recipe at 2x scale (cross-engine cell parity via the
-      // same exact-count and estimate checksums)
-      "cms_20m" ->
-        """WITH items AS (SELECT 'w' || CAST(range % 100000 AS VARCHAR) AS w FROM range(20000000)),
-           ex AS (SELECT w, count(*) AS ne FROM items GROUP BY w),
-           pos AS (
-             SELECT w, j.j AS j,
-               ('0x' || substring(md5(CAST(j.j AS VARCHAR) || ':' || w), 1, 8))::BIGINT % 1024 AS pos
-             FROM ex, (SELECT unnest(range(0, 4)) AS j) j),
-           cells AS (
-             SELECT p.j, p.pos, CAST(sum(e.ne) AS BIGINT) AS c
-             FROM pos p JOIN ex e ON p.w = e.w GROUP BY p.j, p.pos),
-           est AS (
-             SELECT p.w, min(c.c) AS e FROM pos p
-             JOIN cells c ON p.j = c.j AND p.pos = c.pos GROUP BY p.w)
-           SELECT count(*) AS n, CAST(sum(x.ne) AS BIGINT) AS s1,
-             CAST(sum(est.e) AS BIGINT) AS s2
-           FROM ex x JOIN est ON x.w = est.w""",
-      "hll_10m" ->
-        """WITH items AS (SELECT 'u' || CAST(range % 1000000 AS VARCHAR) AS w FROM range(10000000)),
-           h AS (SELECT ('0x' || substring(md5(w), 1, 8))::BIGINT AS h1,
-                        ('0x' || substring(md5(w), 9, 8))::BIGINT AS h2 FROM items),
-           r AS (SELECT h1 % 64 AS register,
-                   CASE WHEN h2 = 0 THEN 33 ELSE bit_count((h2 & (-h2)) - 1) + 1 END AS rank
-                 FROM h),
-           regs AS (
-             SELECT g.register, coalesce(max(r.rank), 0) AS mr
-             FROM (SELECT unnest(range(0, 64)) AS register) g
-             LEFT JOIN r ON g.register = r.register GROUP BY g.register)
-           SELECT count(*) AS n, CAST(sum(mr) AS BIGINT) AS s FROM regs""",
-      "pagerank_10m" -> pagerankOracle10m,
-      "labelprop_10m" -> labelPropOracle10m,
-      "bpe_encode_10m" -> bpeEncodeOracle10m,
-      // same synthetic docs, same uni+bigram md5 featurization (paid
-      // twice — fit and apply — matching the operator's two passes),
-      // same single-ln ratio and Gumbel top-k as q_doc_dsir
-      "dsir_1m" ->
-        """WITH docs AS (
-             SELECT range AS id,
-               'alpha w' || CAST(range % 997 AS VARCHAR) || ' beta w' ||
-                 CAST((range*7+3) % 997 AS VARCHAR) || ' gamma w' ||
-                 CAST((range*13+11) % 997 AS VARCHAR) AS text,
-               range % 20 = 0 AS tgt
-             FROM range(1000000)),
-           toks AS (SELECT id, tgt, string_split_regex(trim(lower(text)), '\s+') AS tk FROM docs),
-           feats AS (
-             SELECT id, tgt, unnest(
-               [array_to_string(tk[i:i], ' ') for i in range(1, greatest(len(tk), 1) + 1)] ||
-               [array_to_string(tk[i:i+1], ' ') for i in range(1, greatest(len(tk) - 1, 1) + 1)]) AS f
-             FROM toks),
-           fb AS (SELECT id, tgt, ('0x' || substring(md5(f), 1, 8))::BIGINT % 1024 AS bucket FROM feats),
-           counts AS (
-             SELECT bucket,
-               CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-               CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-             FROM fb GROUP BY bucket),
-           tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cr) AS BIGINT) AS tr FROM counts),
-           ratios AS (
-             SELECT bucket,
-               CAST(round(ln(((ct + 1)::DOUBLE / (tt + 1024)) /
-                            ((cr + 1)::DOUBLE / (tr + 1024))) * 1e6, 0) AS BIGINT) AS lr_micro
-             FROM counts CROSS JOIN tot),
-           w AS (
-             SELECT p.id, CAST(coalesce(sum(r.lr_micro), 0) AS BIGINT) AS logw_micro
-             FROM fb p LEFT JOIN ratios r ON p.bucket = r.bucket
-             WHERE NOT p.tgt GROUP BY p.id),
-           g AS (
-             SELECT id, logw_micro + CAST(round(-ln(-ln(
-               ((('0x' || substring(md5(id::VARCHAR), 1, 8))::BIGINT % 1000000)::DOUBLE + 0.5)
-                 / 1e6)) * 1e6, 0) AS BIGINT) AS key_micro
-             FROM w)
-           SELECT count(*) AS n, CAST(sum(key_micro) AS BIGINT) AS s
-           FROM (SELECT key_micro FROM g ORDER BY key_micro DESC, id LIMIT 1000) t""",
-      // both engines read the SAME materialized signature parquet (the
-      // spark side wrote it outside the timed region); the oracle gets
-      // its own bounded top-k shape (per-query LATERAL limit — its
-      // window formulation sorts all 200M scored rows and blows the
-      // watchdog) so the row compares search kernels, not fixture
-      // generation or an unbounded sort
-      "hamming_topk_10m" ->
-        """WITH sig AS (
-             SELECT id, s
-             FROM read_parquet('/tmp/graft-bench-hamming-sigs/*.parquet')),
-           q AS (SELECT id, s FROM sig WHERE id < 8),
-           top AS (
-             SELECT q.id AS qid, t.cid, t.h,
-               row_number() OVER (PARTITION BY q.id ORDER BY t.h, t.cid) AS rnk
-             FROM q, LATERAL (
-               SELECT c.id AS cid, bit_count(xor(c.s, q.s)) AS h
-               FROM sig c WHERE c.id <> q.id
-               ORDER BY h, cid LIMIT 10) t)
-           SELECT count(*) AS n, CAST(sum(h) AS BIGINT) AS sh, CAST(sum(rnk) AS BIGINT) AS sr
-           FROM top""",
-      "asof_join_10m" ->
-        """WITH l AS (SELECT range AS lid, range % 100000 AS k,
-                        (range * 48271 % 2147483647) % 10000 AS t
-                      FROM range(10000000)),
-                r AS (SELECT range % 100000 AS k,
-                        (range // 100000) * 1000 + (range % 100000) % 37 AS rt,
-                        range AS amount
-                      FROM range(1000000))
-           SELECT count(*) AS n, count(r.rt) AS m,
-             CAST(sum(coalesce(r.amount, 0)) AS BIGINT) AS s
-           FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.t >= r.rt""",
-      "asof_join_100m" ->
-        """WITH l AS (SELECT range AS lid, range % 100000 AS k,
-                        (range * 48271 % 2147483647) % 10000 AS t
-                      FROM range(100000000)),
-                r AS (SELECT range % 100000 AS k,
-                        (range // 100000) * 1000 + (range % 100000) % 37 AS rt,
-                        range AS amount
-                      FROM range(1000000))
-           SELECT count(*) AS n, count(r.rt) AS m,
-             CAST(sum(coalesce(r.amount, 0)) AS BIGINT) AS s
-           FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.t >= r.rt""",
-      // point side pre-aggregated to distinct x with multiplicities
-      // (~10M groups; the same totals, weighted) — the r10 run pushed
-      // the raw 100M-row inequality join past the 120 s watchdog and a
-      // timed-out oracle reports no ratio; the interval-join workload
-      // itself is unchanged (the hamming bounded-shape recipe)
-      "range_join_100m" ->
-        """WITH p AS (SELECT (range * 16807 % 2147483647) % 10000000 AS x
-                      FROM range(100000000)),
-               pc AS (SELECT x, count(*) AS c FROM p GROUP BY x),
-               iv AS (SELECT range AS iid, range * 9973 % 10000000 AS s
-                      FROM range(10000)),
-              iv2 AS (SELECT iid, s, s + 200 + iid % 800 AS e FROM iv)
-           SELECT CAST(sum(pc.c) AS BIGINT) AS n,
-             CAST(sum(pc.x * pc.c) AS BIGINT) AS sx,
-             CAST(sum(iv2.iid * pc.c) AS BIGINT) AS si
-           FROM pc JOIN iv2 ON pc.x BETWEEN iv2.s AND iv2.e""",
-      "range_join_10m" ->
-        """WITH p AS (SELECT range AS pid,
-                        (range * 16807 % 2147483647) % 10000000 AS x
-                      FROM range(10000000)),
-               iv AS (SELECT range AS iid, range * 9973 % 10000000 AS s
-                      FROM range(10000)),
-              iv2 AS (SELECT iid, s, s + 200 + iid % 800 AS e FROM iv)
-           SELECT count(*) AS n, CAST(sum(p.x) AS BIGINT) AS sx,
-             CAST(sum(iv2.iid) AS BIGINT) AS si
-           FROM p JOIN iv2 ON p.x BETWEEN iv2.s AND iv2.e""",
-      "spatial_join_10m" ->
-        """SELECT count(*) AS n, sum(cnt) AS s FROM (
-             SELECT z.zid, count(*) AS cnt
-             FROM (SELECT ((range*2+1)*48271 % 2147483647)/21474836.47 AS x,
-                          ((range*2+7)*16807 % 2147483647)/21474836.47 AS y
-                   FROM range(10000000)) p
-             JOIN (SELECT range AS zid, (range%5)*20 AS x0, (range//5)*20 AS y0 FROM range(25)) z
-               ON p.x >= z.x0 AND p.x < z.x0+20 AND p.y >= z.y0 AND p.y < z.y0+20
-             GROUP BY z.zid) t""",
-      // the 10m grid join at 100M points (same LCG, same 25-zone grid)
-      "spatial_join_100m" ->
-        """SELECT count(*) AS n, sum(cnt) AS s FROM (
-             SELECT z.zid, count(*) AS cnt
-             FROM (SELECT ((range*2+1)*48271 % 2147483647)/21474836.47 AS x,
-                          ((range*2+7)*16807 % 2147483647)/21474836.47 AS y
-                   FROM range(100000000)) p
-             JOIN (SELECT range AS zid, (range%5)*20 AS x0, (range//5)*20 AS y0 FROM range(25)) z
-               ON p.x >= z.x0 AND p.x < z.x0+20 AND p.y >= z.y0 AND p.y < z.y0+20
-             GROUP BY z.zid) t""",
-      // IVF top-k, replicated closed-form: rounded-cosine argmax
-      // assignment (tie -> lowest centroid id, expressed as one exact
-      // BIGINT arg_max key: micro-cosine * 16 + (15 - cid)), top-nprobe
-      // probes, candidate cosines over probed lists, (cosine desc, id)
-      // top-10 — identical conventions to the certified q_emb_ivf_topk
-      // oracle, over the same generated vectors as the Spark side
-      "ivf_topk_10m" -> {
-        def vec(idExpr: String) = {
-          def w = s"((($idExpr)*37 + d*11)*48271 % 1000003)"
-          s"[CAST($w * ($w + 13) % 1000003 AS DOUBLE)/1000003.0 for d in range(0, 8)]"
-        }
-        // r17: each frame carries its L2 norm as a column, computed
-        // ONCE per row — the r16 form recomputed sqrt(list_sum(x*x))
-        // per (row, centroid) pair, 8x per corpus row in the assign
-        // cross join. Bit-identical: the same sqrt of the same
-        // index-order sum, multiplied in the same order. 41.7 -> 30.3 s
-        // local at 10M (and lower peak memory in the 80M-row assign —
-        // this row's oracle ERRORED on the r16 driver box); checksums
-        // pinned vs the r16 form at 1M and 10M
-        // (n=80, s=206872143, cs=80000000).
-        def cos(a: String, b: String) =
-          s"""(list_sum([($a.v[i]) * ($b.v[i]) for i in range(1, 9)])
-               / ($a.nrm * $b.nrm))"""
-        s"""WITH c AS (SELECT id, v, sqrt(list_sum([(x) * (x) for x in v])) AS nrm
-                  FROM (SELECT range AS id, ${vec("range")} AS v FROM range(10000000))),
-             cent AS (SELECT cid, v, sqrt(list_sum([(x) * (x) for x in v])) AS nrm
-                  FROM (SELECT range AS cid, ${vec("range*1237 + 101")} AS v FROM range(8))),
-             q AS (SELECT qid, v, sqrt(list_sum([(x) * (x) for x in v])) AS nrm
-                  FROM (SELECT range AS qid, ${vec("range*7717 + 3")} AS v FROM range(8))),
-             assign AS (
-               SELECT c.id AS corpus_id,
-                 arg_max(cent.cid,
-                   CAST(round(${cos("c", "cent")} * 1e6, 0) AS BIGINT) * 16 + (15 - cent.cid)) AS cid
-               FROM c, cent GROUP BY c.id),
-             probes AS (
-               SELECT qid, cid FROM (
-                 SELECT q.qid, cent.cid,
-                   row_number() OVER (PARTITION BY q.qid
-                     ORDER BY round(${cos("q", "cent")}, 6) DESC, cent.cid) AS rn
-                 FROM q, cent) t WHERE rn <= 2),
-             cand AS (
-               SELECT p.qid, a.corpus_id, ${cos("q", "c")} AS sim
-               FROM probes p JOIN assign a ON a.cid = p.cid
-               JOIN q ON q.qid = p.qid JOIN c ON c.id = a.corpus_id
-               WHERE a.corpus_id <> p.qid),
-             top AS (
-               SELECT qid, corpus_id, round(sim, 6) AS cosine FROM (
-                 SELECT qid, corpus_id, sim,
-                   row_number() OVER (PARTITION BY qid
-                     ORDER BY round(sim, 6) DESC, corpus_id) AS rnk
-                 FROM cand) t WHERE rnk <= 10)
-           SELECT count(*) AS n, sum(corpus_id) AS s,
-             sum(CAST(round(cosine * 1e6, 0) AS BIGINT)) AS cs FROM top"""
-      },
-      "knn_join_10m" ->
-        """WITH pts AS (SELECT range AS pid,
-                          ((range*2+1)*48271 % 2147483647)/21474836.47 AS x,
-                          ((range*2+7)*16807 % 2147483647)/21474836.47 AS y
-                        FROM range(10000000)),
-                q AS (SELECT range AS qid,
-                          ((range*3+11)*69621 % 2147483647)/21474836.47 AS x,
-                          ((range*3+17)*16807 % 2147483647)/21474836.47 AS y
-                      FROM range(1000))
-           SELECT count(*) AS n, sum(rnk) AS s FROM (
-             SELECT q.qid, p.pid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY round(sqrt((p.x-q.x)*(p.x-q.x)+(p.y-q.y)*(p.y-q.y)),6), p.pid) AS rnk
-             FROM q JOIN pts p ON p.x BETWEEN q.x - 0.5 AND q.x + 0.5
-                              AND p.y BETWEEN q.y - 0.5 AND q.y + 0.5
-             WHERE sqrt((p.x-q.x)*(p.x-q.x)+(p.y-q.y)*(p.y-q.y)) <= 0.5) t
-           WHERE rnk <= 10""",
-      "dedup_exact_100m" ->
-        """WITH docs AS (SELECT range AS id,
-                           'document body text ' || (range % 50000000) AS text
-                         FROM range(100000000))
-           SELECT count(*) AS n, sum(length(text)) AS s FROM (
-             SELECT t.* FROM docs t
-             JOIN (SELECT min(id) AS keep FROM docs GROUP BY md5(text)) k ON t.id = k.keep)""",
-      "dedup_exact_10m" ->
-        """WITH docs AS (SELECT range AS id,
-                           'document body text ' || (range % 5000000) AS text
-                         FROM range(10000000))
-           SELECT count(*) AS n, sum(length(text)) AS s FROM (
-             SELECT t.* FROM docs t
-             JOIN (SELECT min(id) AS keep FROM docs GROUP BY md5(text)) k ON t.id = k.keep)""",
-      "kmeans_1m" -> {
-        // two unrolled Lloyd iterations + final assignment, identical
-        // recurrence to Similarity.kmeansFit; distances via list
-        // comprehension (the id x dim join formulation is ~5x slower)
-        def assign(cl: String, out: String) =
-          s"""$out AS (
-               SELECT id, list_indexof(ds, list_min(ds)) - 1 AS c FROM (
-                 SELECT id,
-                   [list_sum([(mv[i] - cent[i]) * (mv[i] - cent[i]) for i in range(1, 9)]) for cent in cents] AS ds
-                 FROM mv, $cl))"""
-        def update(a: String, prevD: String, outU: String, outD: String, outL: String) =
-          s"""$outU AS (
-               SELECT c, gs - 1 AS d, sum(x) // count(*) AS cx FROM (
-                 SELECT $a.c, generate_subscripts(mv.mv, 1) AS gs, unnest(mv.mv) AS x
-                 FROM $a JOIN mv ON $a.id = mv.id) t
-               GROUP BY c, gs),
-             $outD AS (
-               SELECT $prevD.c, $prevD.d, COALESCE($outU.cx, $prevD.cx) AS cx
-               FROM $prevD LEFT JOIN $outU ON $prevD.c = $outU.c AND $prevD.d = $outU.d),
-             $outL AS (
-               SELECT list(cl ORDER BY c) AS cents FROM (
-                 SELECT c, list(cx ORDER BY d) AS cl FROM $outD GROUP BY c) g)"""
-        s"""WITH mv AS (
-             SELECT range AS id,
-               [CAST(round(((range*37 + d*11)*48271 % 1000003) / 1000003.0 * 1000000, 0) AS BIGINT) for d in range(0, 8)] AS mv
-             FROM range(1000000)),
-           c0l AS (
-             SELECT list(mv ORDER BY id) AS cents FROM (SELECT * FROM mv ORDER BY id LIMIT 8)),
-           c0d AS (
-             SELECT c, generate_subscripts(mv, 1) - 1 AS d, unnest(mv) AS cx
-             FROM (SELECT row_number() OVER (ORDER BY id) - 1 AS c, mv
-                   FROM (SELECT * FROM mv ORDER BY id LIMIT 8)) s),
-           ${assign("c0l", "a1")},
-           ${update("a1", "c0d", "u1", "c1d", "c1l")},
-           ${assign("c1l", "a2")},
-           ${update("a2", "c1d", "u2", "c2d", "c2l")},
-           ${assign("c2l", "a3")}
-           SELECT count(*) AS n, sum(c) AS s FROM a3"""
-      },
-      "transform_10m" ->
-        """SELECT count(*) AS n, sum(mx + my) AS s FROM (
-             SELECT radians(CAST(range % 360 AS DOUBLE) - 179.5) * 6378137.0 AS mx,
-                    6378137.0 * ln(tan(pi() / 4 + radians(CAST(range % 160 AS DOUBLE) - 79.5) / 2)) AS my
-             FROM range(10000000))""",
-      "pack_10m" ->
-        """WITH t AS (SELECT range AS id, 1 + (range*37) % 100 AS tok,
-                        md5('1:' || CAST(range AS VARCHAR)) AS ord
-                      FROM range(10000000)),
-             c AS (SELECT id,
-                     CAST(sum(tok) OVER (ORDER BY ord, CAST(id AS VARCHAR)
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok AS BIGINT) AS s
-                   FROM t)
-           SELECT count(*) AS n, sum(s // 2048) AS a, sum(s % 2048) AS b FROM c""")
-
-    val allOracles =
-      headline.flatMap(n => SparkEntry.oracleSql.get(n).map(n -> _)).toMap ++
-        bigWorkloads ++ operatorOracles
-    allOraclesKeys = allOracles.keySet
+    // Oracle-engine (DuckDB) timings for the same rows at the same sf,
+    // via the driver-side python3+duckdb that also powers the
+    // correctness gate. Measurement harness only — the engine under
+    // test never links duckdb. Missing python/duckdb degrades to
+    // spark-only.
+    val allOracles = rows.flatMap(r => r.oracle.map(r.name -> _)).toMap
 
     // ---- oracle phase: priority-ordered chunks, flushed as they land --
-    // r14's kill proved the all-at-once oracle batch is a single point
-    // of failure: ~1200+ s of DuckDB timing with nothing recorded until
-    // the very end. The batch runs in chunks (of 4 since r17 — the r16
-    // driver run overshot its oracle deadline INSIDE a 6-row chunk, so
-    // the budget check between chunks needs finer grain); after each
-    // chunk the cumulative artifact is flushed, so a kill mid-phase
-    // still leaves ratios for everything already timed. Chunk ORDER is
-    // the grading priority. r17 reorders it by what the r16 driver run
-    // actually lost: the headline-optimized rows whose oracle never
-    // landed (spatial_join/ivf/knn/minhash/dsir — the rows this round
-    // is graded on) come first, then the remaining heavy amortized
-    // rows, then the alphabetical amortized tail, then the sub-second
-    // micro rows whose loss costs least.
-    val oraclePriority = Seq(
-      // r16-ungraded headline rows — must land first
-      "spatial_join_100m", "ivf_topk_10m", "minhash_10m",
-      "spatial_join_10m", "knn_join_10m", "dsir_1m", "dedup_exact_100m",
-      // judge re-land rows (graded r16; keep them early)
-      "pagerank_10m", "transform_10m", "labelprop_10m", "bpe_encode_10m",
-      // heavy amortized rows next so a budget cut eats the cheap tail
-      "asof_join_100m", "agg_100m_sql", "window_100m_sql",
-      "strings_100m_sql", "cms_20m", "hamming_topk_10m", "norm_20m",
-      "hll_10m", "dedup_exact_10m")
-    val amortizedRe = ".*_(\\d+)(m|m_sql)$".r
-    val orderedOracles: Seq[String] = {
-      val keys = allOracles.keys.toSeq
-      val prio = oraclePriority.filter(allOracles.contains)
-      val amort = keys.filterNot(prio.contains).filter(k => amortizedRe.findFirstIn(k).isDefined)
-      val rest = keys.filterNot(prio.contains).filterNot(amort.contains)
-      prio ++ amort.sorted ++ rest.sorted
-    }
-    for (chunk <- orderedOracles.grouped(4)) {
+    // The batch runs in chunks (of 4 since r17 — the r16 driver run
+    // overshot its oracle deadline INSIDE a 6-row chunk, so the budget
+    // check between chunks needs finer grain); after each chunk the
+    // cumulative artifact is flushed, so a kill mid-phase still leaves
+    // ratios for everything already timed. Chunk order is
+    // [[BenchRows.oracleOrder]].
+    for (chunk <- BenchRows.oracleOrder(rows).grouped(4)) {
       if (elapsedS > budgetS - confirmReserveS) {
         System.err.println(f"[bench] oracle chunk SKIPPED (${elapsedS}%.0f s past the ${budgetS - confirmReserveS}%.0f s oracle deadline): ${chunk.mkString(", ")}")
       } else {
         // group by watchdog timeout so each oracle runs under its own
         // (a single batch would apply one arbitrary entry's timeout)
-        val byTimeout = chunk.groupBy(n => oracleTimeouts.get(n))
+        val byTimeout = chunk.groupBy(BenchRows.watchdogS)
         val timed = byTimeout.flatMap { case (tmo, names) =>
           duckdbTimes(sfDir, names.map(n => n -> allOracles(n)).toMap, tmo)
         }
@@ -1814,6 +603,15 @@ object Bench {
     val candidates = retryCandidates(
       results.toSeq, duck.toMap, prior, runners.keySet.toSet, maxRetries,
       priorSpark = prevSparkTimes())
+    // one more trial of BOTH engines; each keeps its best time
+    def rerunPair(name: String): Unit = {
+      val v2 = runners(name)()
+      val d2 = duckdbTimes(sfDir, Map(name -> allOracles(name)), BenchRows.watchdogS(name)).getOrElse(name, -2.0)
+      stateLock.synchronized {
+        if (v2 > 0) results(name) = math.min(results(name), v2)
+        if (d2 > 0) duck(name) = math.min(duck(name), d2)
+      }
+    }
     for ((name, v, d, jump) <- candidates) {
       // budget guard: a confirmation pair re-runs BOTH engines — the
       // exact spend the r14 kill landed in the middle of. Past the
@@ -1824,14 +622,8 @@ object Bench {
       } else {
         System.err.println(
           f"[bench] $name: ratio ${v / d}%.2f is ${jump}%.1fx the prior ratio — confirming both engines")
-        val v2 = runners(name)()
-        val d2 = duckdbTimes(sfDir, Map(name -> allOracles(name)),
-          oracleTimeouts.get(name)).getOrElse(name, -2.0)
-        stateLock.synchronized {
-          retried(name) = (v, d)
-          if (v2 > 0) results(name) = math.min(v, v2)
-          if (d2 > 0) duck(name) = math.min(d, d2)
-        }
+        stateLock.synchronized { retried(name) = (v, d) }
+        rerunPair(name)
         // r12 lesson (window_10m_sql 2.67x graded): on a busy box the
         // confirmation pair CONFIRMS rather than corrects — both trials
         // hit the same contention. When the best pair is still over the
@@ -1843,13 +635,7 @@ object Bench {
           System.err.println(
             f"[bench] $name: still ${results(name) / duck(name)}%.2fx over the gate on a " +
               f"contended window (load $ld%.1f, ext $ext%.2f) — third trial")
-          val v3 = runners(name)()
-          val d3 = duckdbTimes(sfDir, Map(name -> allOracles(name)),
-            oracleTimeouts.get(name)).getOrElse(name, -2.0)
-          stateLock.synchronized {
-            if (v3 > 0) results(name) = math.min(results(name), v3)
-            if (d3 > 0) duck(name) = math.min(duck(name), d3)
-          }
+          rerunPair(name)
         }
         flushPartial()
       }
@@ -1875,7 +661,7 @@ object Bench {
    *  Spark side's warmup) by shelling out to python3; returns seconds
    *  per query, empty map if the oracle engine is unavailable. */
   private def duckdbTimes(sfDir: String, oracles: Map[String, String],
-      timeoutS: Option[String] = None): Map[String, Double] = {
+      timeoutS: Option[Int] = None): Map[String, Double] = {
     if (oracles.isEmpty) return Map.empty
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft-bench-duck")
@@ -1972,7 +758,7 @@ object Bench {
       val pyPath = dir.resolve("bench_duck.py")
       java.nio.file.Files.write(pyPath, py.getBytes("UTF-8"))
       val pb = new ProcessBuilder("python3", pyPath.toString, sfDir, dir.toString)
-      timeoutS.foreach(t => pb.environment().put("GRAFT_ORACLE_TIMEOUT_S", t))
+      timeoutS.foreach(t => pb.environment().put("GRAFT_ORACLE_TIMEOUT_S", t.toString))
       val proc = pb.start()
       val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
       proc.waitFor()

@@ -220,7 +220,7 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
     /** Returns the slot for these bytes (parsed geometry guaranteed,
      *  prepared from the second sighting on), or null when uncacheable. */
     def lookup(b: Array[Byte]): PrepSlot = {
-      if (b.length > 65536) return null
+      if (b.length == 0 || b.length > 65536) return null
       val h = keyHash(b)
       var i = 0
       while (i < slots.length) {

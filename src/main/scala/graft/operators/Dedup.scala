@@ -259,6 +259,9 @@ object Dedup {
    *  sorts). Returns (result, candidate cache) — the DISTINCT pair
    *  frame is materialized here to pick the signature re-join
    *  strategy, and the caller frees it after the result exists. */
+  /** Per-task SHUFFLE_HASH build bound (MB), see [[estPairs]]. */
+  private val ShjBuildMb = 32.0
+
   private def estPairs(sigs: DataFrame, banded: DataFrame,
       numHashes: Int): (DataFrame, DataFrame) = {
     // The self-join stays sort-merge DELIBERATELY: its per-partition
@@ -284,16 +287,15 @@ object Dedup {
     // self-join would kill these joins where the planner's sort-merge
     // join spills gracefully. The pair frame is materialized anyway
     // (it outlives the signature cache), so the count is free; the
-    // per-task build estimate stays under
-    // spark.graft.minhash.shjBuildMb (default 32 MB — half the ~60 MB
-    // that OOMed the 8g session) or the hints are dropped.
+    // per-task build estimate stays under ShjBuildMb (32 MB — half the
+    // ~60 MB that OOMed the 8g session) or the hints are dropped. The
+    // estimate is an average over the shuffle partitions: with AQE on,
+    // partition coalescing and id_a skew on duplicate-heavy corpora can
+    // push the largest task's build past it toward that OOM.
     val nCand = pairs.count()
-    val spark = sigs.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val maxMb = spark.conf.getOption("spark.graft.minhash.shjBuildMb")
-      .map(_.toDouble).getOrElse(32.0)
+    val parts = math.max(sigs.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val buildMb = nCand.toDouble / parts * (16 + 4.0 * numHashes + 64) / (1 << 20)
-    def hinted(df: DataFrame) = if (buildMb < maxMb) df.hint("shuffle_hash") else df
+    def hinted(df: DataFrame) = if (buildMb < ShjBuildMb) df.hint("shuffle_hash") else df
     val out = hinted(pairs)
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
     val out2 = hinted(out)

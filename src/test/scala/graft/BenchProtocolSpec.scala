@@ -198,6 +198,35 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(!body.contains(""""very_long_workload_name_number_01_10m""""), body)
   }
 
+  test("gradingBody collapses r_ub, then ungraded, to counts when trimming queries is not enough") {
+    // ~80 long ungraded names overflow the window on their own, with
+    // an empty "queries" map: only the second stage can save the line
+    val names = (1 to 80).map(i => f"very_long_oracle_backed_workload_name_$i%02d_10m")
+    val body = Bench.gradingBody(names.map(_ -> -3.0) :+ ("slow_10m" -> 5.0),
+      Map("slow_10m" -> -1.0), _ => 120.0,
+      oracleDefined = names.toSet + "slow_10m", microRows = Set.empty,
+      skipped = Nil, partial = false, sfDir = "/sf")
+    assert(body.length <= 1870, s"body ${body.length} chars")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s"{$body}")
+    assert(json.get("n_ungraded").asInt == 80, body)
+    assert(json.get("n_r_ub").asInt == 1, body)
+    assert(json.get("metric").asText == "amortized_geomean_vs_oracle")
+  }
+
+  test("prevSparkTimes reads the grading line's queries, not the total line's above it") {
+    // a failed run's tail: the total line (no oracle structs, -1.000
+    // sentinels in its "queries") followed by the grading line
+    val dir = java.nio.file.Files.createTempDirectory("bench-prev-anchor").toFile
+    val tail = """{\"metric\":\"total\",\"value\":9.100,\"queries\":{\"pack_10m\":-1.000,""" +
+      """\"agg_10m_sql\":0.900},\"vs_oracle\":{},\"sf\":\"/sf\"}\n""" +
+      """{\"pad\":\"...\",\"metric\":\"amortized_geomean_vs_oracle\",\"value\":0.3,""" +
+      """\"amortized\":{\"agg_10m_sql\":0.3},\"queries\":{\"agg_10m_sql\":0.9},\"sf\":\"/sf\"}"""
+    java.nio.file.Files.write(new java.io.File(dir, "BENCH_r18.json").toPath,
+      s"""{"n": 18, "tail": "$tail"}""".getBytes("UTF-8"))
+    assert(Bench.prevSparkTimes(dir.getPath) == Map("agg_10m_sql" -> 0.9))
+    assert(Bench.prevRatios(dir.getPath) == Map("agg_10m_sql" -> 0.3))
+  }
+
   test("prevRatios/prevSparkTimes fall back to the r17 grading-line maps") {
     // an artifact whose tail is ONLY the compact grading line (the r17
     // shape: no vs_oracle structs survive the truncation) must still

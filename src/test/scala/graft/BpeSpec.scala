@@ -83,10 +83,8 @@ class BpeSpec extends SparkSpec {
   test("bench workload parity pin: bpe_encode generator at 100k matches the oracle value") {
     // the bench harness compares TIMES only, so the value parity of the
     // bpe_encode_10m recipe is pinned here: the DuckDB oracle formulation
-    // (Bench.bpeEncodeOracle10m at range(100000)) returns (100000, 2600022)
-    val docs = spark.range(100000L).selectExpr("id",
-      "concat('the quick brown fox ', md5(CAST(id AS STRING))) AS text")
-    val r = Bpe.encode(docs, col("id"), col("text"), SparkEntry.BpeCertMerges)
+    // (BenchRows.bpeEncodeOracle10m at range(100000)) returns (100000, 2600022)
+    val r = Bpe.encode(BenchRows.foxDocs(spark, 100000L), col("id"), col("text"), SparkEntry.BpeCertMerges)
       .agg(count(lit(1)), sum(size(col("tokens")))).collect()(0)
     assert((r.getLong(0), r.getLong(1)) == ((100000L, 2600022L)), r.toString)
   }

@@ -136,6 +136,14 @@ class GeoFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("col-vs-col predicate on an empty WKB right operand raises the parse error") {
+    val e = intercept[Exception](spark.sql(
+      "SELECT ST_Intersects(a, b) FROM VALUES (ST_MakeEnvelope(0, 0, 1, 1), X'') AS t(a, b)").collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(!chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]), chain.mkString("\n"))
+    assert(chain.exists(_.isInstanceOf[org.locationtech.jts.io.ParseException]), chain.mkString("\n"))
+  }
+
   test("constructive ops") {
     assertSql("ST_Area(ST_Buffer(ST_Point(0, 0), 10)) > 310", true)
     assertSql("ST_AsText(ST_Centroid(ST_MakeEnvelope(0, 0, 2, 2)))", "POINT (1 1)")

@@ -838,12 +838,9 @@ class SimilaritySpec extends SparkSpec {
   test("bench workload parity pin: hamming_topk generator at 100k matches the oracle values") {
     // the bench harness compares TIMES only, so the hamming_topk_10m
     // recipe's value parity is pinned here: the DuckDB oracle
-    // (Bench operatorOracles at range(100000)) returns (200, 3257, 1100)
+    // (BenchRows' hamming_topk_10m oracle at range(100000)) returns (200, 3257, 1100)
     import org.apache.spark.sql.functions._
-    def vecs(m: Long) = spark.range(m)
-      .selectExpr("id", "concat(md5(CAST(id AS STRING)), md5(concat(CAST(id AS STRING), 'x'))) AS h")
-      .selectExpr("id",
-        "transform(sequence(1, 63), j -> instr('0123456789abcdef', substring(h, j, 1)) - 8.5) AS v")
+    def vecs(m: Long) = BenchRows.hammingVecs(spark, m)
     val r = Similarity.hammingTopK(vecs(100000L), vecs(20L),
         col("id"), col("v"), col("id"), col("v"), k = 10)
       .agg(count(lit(1)), sum("hamming"), sum("rank")).collect()(0)

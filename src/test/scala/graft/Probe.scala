@@ -1,25 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling harness for the optimization rounds (not part of
-  * the driver contract). Lives in the TEST source set so it never
-  * ships in the library artifact (ADVICE r16); run with
+  * the driver contract): phase splits and plan dumps of bench kernels,
+  * over the [[BenchRows]] generators. Whole-row timings are
+  * `runMain graft.Bench <row>[,<row>...]`. Lives in the TEST source set
+  * so it never ships in the library artifact (ADVICE r16); run with
   * `sbt "Test/runMain graft.Probe <case> [args]"`. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val what = args.headOption.getOrElse("minhash_phases")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.install(spark)
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     import graft.GeoFunctions._
 
     def time(label: String)(body: => Any): Double = {
@@ -30,47 +23,47 @@ object Probe {
       dt
     }
 
+    def explain(df: DataFrame): Unit = println(
+      df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+
+    // the LSH stages of Dedup.minhashCandidates, hand-rolled so each
+    // one can be timed or have its plan printed
+    def sigCache(m: Long) = BenchRows.minhashDocs(spark, m).select(col("id").as("__id"),
+        graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("__sig"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def bandJoin(banded: DataFrame) = banded.as("a").join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
+    def sigRejoin(pairs: DataFrame, sigs: DataFrame, hint: DataFrame => DataFrame) =
+      hint(hint(pairs)
+          .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a"))
+        .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
+        .withColumn("est_jaccard",
+          expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
+
+    def docs(m: Long) = BenchRows.dedupDocs(spark, m)
+
     what match {
       case "minhash_phases" =>
         val n = args.lift(1).map(_.toLong).getOrElse(10000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m)
-          .selectExpr("id", s"CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE $m + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        // warm
-        locally {
-          val p = graft.operators.Dedup.minhashCandidates(docs(1000000L), col("id"), col("text"), 16, 4, 3)
-          p.filter(col("est_jaccard") >= 0.9).agg(count(lit(1))).collect()
-          p.unpersist(blocking = false)
-          ()
-        }
+        BenchRows.minhashN(spark, 1000000L) // warm
         (1 to 2).foreach { trial =>
           println(s"--- trial $trial, n=$n ---")
           // phase 0: raw doc generation + signature compute, no persist
           time("sig compute (no persist, agg only)") {
-            docs(n).select(graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("s"))
+            BenchRows.minhashDocs(spark, n).select(graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("s"))
               .agg(sum(element_at(col("s"), 1).cast("long"))).collect()(0).getLong(0)
           }
-          val sigs = docs(n).select(col("id").as("__id"),
-            graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("__sig"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val sigs = sigCache(n)
           time("A: sigs persist+count") { sigs.count() }
           val banded = graft.operators.Dedup.bandBuckets(sigs, 16, 4)
           time("B0: banded count (from cache)") { banded.count() }
-          val pairs0 = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.__id") < col("b.__id"))
-            .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
+          val pairs0 = bandJoin(banded)
           time("B1: band self-join (no distinct)") { pairs0.count() }
           val pairs = pairs0.distinct()
           time("B2: +distinct") { pairs.count() }
-          val full = pairs
-            .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-            .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
-            .withColumn("est_jaccard",
-              expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
+          val full = sigRejoin(pairs, sigs, identity)
           time("C: sig re-join + est + agg") {
             full.filter(col("est_jaccard") >= 0.9)
               .agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()(0).getLong(0)
@@ -78,84 +71,14 @@ object Probe {
           sigs.unpersist(blocking = true)
         }
 
-      case "minhash_real" =>
-        val n = args.lift(1).map(_.toLong).getOrElse(10000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m)
-          .selectExpr("id", s"CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE $m + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        def run(m: Long): Long = {
-          val pairs = graft.operators.Dedup.minhashCandidates(docs(m), col("id"), col("text"), 16, 4, 3)
-          val out = pairs.filter(col("est_jaccard") >= 0.9)
-            .agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()(0).getLong(0)
-          pairs.unpersist(blocking = false)
-          out
-        }
-        run(1000000L)
-        (1 to 3).foreach { t => time(s"minhash_real n=$n trial $t") { run(n) } }
-
-      case "minhash_cached" =>
-        val n = args.lift(1).map(_.toLong).getOrElse(10000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m)
-          .selectExpr("id", s"CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE $m + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        def run(m: Long): Long = {
-          import graft.operators.Dedup
-          val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          val sigs = docs(m).select(col("id").as("__id"),
-            Dedup.minhashSignature(col("text"), 16, 3).as("__sig")).persist(lvl)
-          val banded = Dedup.bandBuckets(sigs, 16, 4)
-            .repartition(col("band"), col("bh")).persist(lvl)
-          val pairs = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.__id") < col("b.__id"))
-            .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-            .distinct()
-          val full = pairs.hint("shuffle_hash")
-            .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-            .hint("shuffle_hash")
-            .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
-            .withColumn("est_jaccard",
-              expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
-          val out = full.filter(col("est_jaccard") >= 0.9)
-            .agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()(0).getLong(0)
-          banded.unpersist(blocking = false)
-          sigs.unpersist(blocking = false)
-          out
-        }
-        run(1000000L)
-        (1 to 3).foreach { t => time(s"minhash_cached n=$n trial $t") { run(n) } }
-
       case "ivf_plan" =>
-        def ivfVecSql(idExpr: String): String = {
-          def w = s"((($idExpr)*37 + d*11)*48271 % 1000003)"
-          s"transform(sequence(0, 7), d -> CAST($w * ($w + 13) % 1000003 AS DOUBLE) / 1000003.0)"
-        }
-        val n = args.lift(1).map(_.toLong).getOrElse(100000L)
-        val corpus = spark.range(n).selectExpr("id", s"${ivfVecSql("id")} AS v")
-        val cents = spark.range(8L).selectExpr("id AS cid", s"${ivfVecSql("id*1237 + 101")} AS cv")
-        val qs = spark.range(8L).selectExpr("id AS qid", s"${ivfVecSql("id*7717 + 3")} AS qv")
-        val out = graft.operators.Similarity.ivfTopK(corpus, qs, cents,
-            col("id"), col("v"), col("qid"), col("qv"), col("cid"), col("cv"),
-            k = 10, nprobe = 2)
-          .agg(count(lit(1)), sum("corpus_id"),
-            sum(expr("CAST(round(cosine * 1e6, 0) AS BIGINT)")))
+        val out = BenchRows.ivfTopK(spark, args.lift(1).map(_.toLong).getOrElse(100000L))
         out.collect()
-        println(out.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        explain(out)
 
       case "dedup_phases" =>
         val n = args.lift(1).map(_.toLong).getOrElse(100000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m).select(col("id"),
-          concat(lit("document body text "), expr(s"CAST(id % ${m / 2} AS STRING)")).as("text"))
-        def dedupN(m: Long): Long =
-          graft.operators.Dedup.exact(docs(m), col("id"), col("text"))
-            .agg(count(lit(1)), sum(length(col("text")))).collect()(0).getLong(0)
-        dedupN(1000000L)
+        BenchRows.dedupN(spark, 1000000L) // warm
         (1 to 2).foreach { trial =>
           println(s"--- trial $trial, n=$n ---")
           time("docs gen floor (sum length)") {
@@ -166,17 +89,14 @@ object Probe {
               .groupBy("__k").agg(min("__id").as("__keep_id"))
               .agg(count(lit(1))).collect()(0).getLong(0)
           }
-          time("full exact dedup") { dedupN(n) }
+          time("full exact dedup") { BenchRows.dedupN(spark, n) }
         }
-        println(graft.operators.Dedup.exact(docs(1000L), col("id"), col("text"))
-          .agg(count(lit(1))).queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        explain(graft.operators.Dedup.exact(docs(1000L), col("id"), col("text")).agg(count(lit(1))))
 
       case "dedup_variants" =>
         // r17: keep-agg key width (hex vs binary md5) x semi-join
         // strategy (planner SMJ vs keep-side SHUFFLE_HASH build)
         val n = args.lift(1).map(_.toLong).getOrElse(100000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m).select(col("id"),
-          concat(lit("document body text "), expr(s"CAST(id % ${m / 2} AS STRING)")).as("text"))
         def exactV(df: org.apache.spark.sql.DataFrame, bin: Boolean, hint: Boolean) = {
           val key = if (bin) unhex(md5(col("text").cast("binary"))) else md5(col("text").cast("binary"))
           val keep = df.select(key.as("__k"), col("id").as("__id"))
@@ -212,88 +132,33 @@ object Probe {
           time("full bin SMJ") { run(exactV(docs(n), bin = true, hint = false)) }
           if (withShj) time("full bin SHJ-hint") { run(exactV(docs(n), bin = true, hint = true)) }
         }
-        println(exactV(docs(n), bin = true, hint = false)
-          .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-
-      case "dsir" =>
-        val n = args.lift(1).map(_.toLong).getOrElse(1000000L)
-        def docs(m: Long): org.apache.spark.sql.DataFrame = spark.range(m).selectExpr("id",
-          "concat('alpha w', CAST(id % 997 AS STRING), ' beta w', " +
-            "CAST((id*7+3) % 997 AS STRING), ' gamma w', " +
-            "CAST((id*13+11) % 997 AS STRING)) AS text",
-          "id % 20 = 0 AS tgt")
-        def run(m: Long): Long =
-          graft.operators.Sampling.dsirSelect(docs(m), col("id"), col("text"),
-              col("tgt"), k = 1000, buckets = 1024)
-            .agg(count(lit(1)), sum("key_micro")).collect()(0).getLong(0)
-        run(100000L)
-        (1 to 3).foreach { t => time(s"dsir n=$n trial $t") { run(n) } }
-
-      case "minhash_plan" =>
-        val docs = spark.range(1000000L)
-          .selectExpr("id", "CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE 1000000 + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        val sigs = docs.select(col("id").as("__id"),
-          graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("__sig"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigs.count()
-        val out = graft.operators.Dedup.minhashCandidatesFromSigs(sigs, 16, 4)
-          .filter(col("est_jaccard") >= 0.9)
-          .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
-        out.collect()
-        println(out.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        explain(exactV(docs(n), bin = true, hint = false))
 
       case "minhash_plan_r17" =>
         // the r17 operator shape: pre-sorted banding cache + gated SHJ
         // re-joins — prints the executed pair-join plan (the sorts
         // above the InMemoryTableScans must be GONE)
-        val docs = spark.range(10000000L)
-          .selectExpr("id", "CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE 10000000 + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        val sigs = docs.select(col("id").as("__id"),
-          graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("__sig"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sigs = sigCache(10000000L)
         sigs.count()
         val banded = graft.operators.Dedup.bandBuckets(sigs, 16, 4)
           .repartition(col("band"), col("bh"))
           .sortWithinPartitions(col("band"), col("bh"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         banded.count()
-        val cand = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.__id") < col("b.__id"))
-          .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-          .distinct()
+        val cand = bandJoin(banded).distinct()
         time("pair join over sorted cache") { cand.count() }
-        println(cand.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        val full = cand.hint("shuffle_hash")
-          .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-          .hint("shuffle_hash")
-          .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
-          .withColumn("est_jaccard",
-            expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
+        explain(cand)
+        val full = sigRejoin(cand, sigs, _.hint("shuffle_hash"))
           .filter(col("est_jaccard") >= 0.9)
           .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
         time("full est pipeline") { full.collect()(0).getLong(0) }
-        println(full.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        explain(full)
 
       case "spatial_phases" =>
         val n = args.lift(1).map(_.toLong).getOrElse(10000000L)
-        def lcgPts(m: Long) = spark.range(m).select(col("id"),
-          st_point(expr("((id*2+1)*48271 % 2147483647)/21474836.47"),
-            expr("((id*2+7)*16807 % 2147483647)/21474836.47")).as("pt"))
-        val zones25 = spark.range(25).select(col("id").as("zid"),
-          st_makeenvelope(expr("CAST(id % 5 * 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 AS DOUBLE)"),
-            expr("CAST(id % 5 * 20 + 20 AS DOUBLE)"), expr("CAST(id DIV 5 * 20 + 20 AS DOUBLE)")).as("zone"))
-        def fullJoin(m: Long): Long =
-          graft.operators.SpatialJoin.join(lcgPts(m), zones25, col("pt"), col("zone"), "st_within", cellSize = 20.0)
-            .groupBy("zid").count().agg(count(lit(1)), sum("count")).collect()(0).getLong(0)
+        def lcgPts(m: Long) = BenchRows.lcgPts(spark, m)
+        val zones25 = BenchRows.zones25(spark)
+        def fullJoin(m: Long): Long = BenchRows.spatialJoinN(spark, m)
         fullJoin(1000000L) // warm
         (1 to 2).foreach { trial =>
           println(s"--- trial $trial, n=$n ---")
@@ -304,8 +169,8 @@ object Probe {
           }
           time("full grid join (st_within)") { fullJoin(n) }
         }
-        println(graft.operators.SpatialJoin.join(lcgPts(1000L), zones25, col("pt"), col("zone"), "st_within", cellSize = 20.0)
-          .groupBy("zid").count().queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        explain(graft.operators.SpatialJoin.join(lcgPts(1000L), zones25, col("pt"), col("zone"),
+          "st_within", cellSize = 20.0).groupBy("zid").count())
 
       case other => sys.error(s"unknown probe: $other")
     }
