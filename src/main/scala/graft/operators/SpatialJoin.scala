@@ -3,6 +3,7 @@ package graft.operators
 import graft.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 
 /**
  * Distributed spatial join.
@@ -51,12 +52,13 @@ object SpatialJoin {
    *                  st_dwithin uses `distance`
    * @param cellSize  grid cell edge in coordinate units; <=0 → sample-estimate
    * @param driverSample with cellSize<=0: true → estimate the cell
-   *                  size eagerly with a driver-side collect over a
-   *                  random sample (explicit-API convenience); false →
-   *                  embed the same estimator as a broadcast 1-row
-   *                  subplan so NO Spark job runs at plan time (the
-   *                  optimizer rule uses this — launching jobs inside
-   *                  logical optimization blocks planning at scale)
+   *                  size eagerly with a driver-side collect of
+   *                  [[cellSizeFrame]] (explicit-API convenience); false
+   *                  → embed that frame as one scalar subquery, run once
+   *                  per execution for both sides, so NO Spark job runs
+   *                  at plan time (the optimizer rule uses this —
+   *                  launching jobs inside logical optimization blocks
+   *                  planning at scale)
    */
   def join(
       left: DataFrame, right: DataFrame,
@@ -82,17 +84,14 @@ object SpatialJoin {
         .drop("__lg", "__lb", "__rg", "__rb")
     }
 
-    // resolve the grid cell size: fixed, driver-estimated, or deferred
-    // to a broadcast scalar computed within the job itself
-    val (attachEstimate, lcs, rcs) =
-      if (cellSize > 0)
-        (false, lit(cellSize), lit(cellSize))
-      else if (driverSample)
-        { val cs = estimateCellSize(left, leftGeom, right, rightGeom); (false, lit(cs), lit(cs)) }
-      else
-        (true, col("__lcs"), col("__rcs"))
+    // the grid cell size: fixed, driver-estimated, or deferred to a
+    // scalar subquery evaluated within the job itself
+    val cs =
+      if (cellSize > 0) lit(cellSize)
+      else if (driverSample) lit(estimateCellSize(left, leftGeom, right, rightGeom))
+      else ColumnShim.scalarSubquery(cellSizeFrame(left, leftGeom, right, rightGeom))
 
-    def withCells(df: DataFrame, geom: Column, prefix: String, padBy: Double, cs: Column): DataFrame = {
+    def withCells(df: DataFrame, geom: Column, prefix: String, padBy: Double): DataFrame = {
       val g = col(s"${prefix}g")
       df.withColumn(s"${prefix}g", geom)
         .withColumn(s"${prefix}b", st_extent(g))
@@ -106,22 +105,9 @@ object SpatialJoin {
             floor((col(s"${prefix}b.max_y") + padBy) / cs).cast("long"))))
     }
 
-    val (leftIn, rightIn) =
-      if (!attachEstimate) (left, right)
-      else {
-        // NOTE: no broadcast() hint here — this path is invoked from
-        // inside the optimizer, after Spark's hint-resolution batch, so
-        // a ResolvedHint node would survive to physical planning and
-        // trip an internal error. The 1-row aggregate is far below
-        // autoBroadcastJoinThreshold and broadcasts on its own.
-        val est = cellSizeFrame(left, leftGeom, right, rightGeom)
-        (left.crossJoin(est.select(col("__cs").as("__lcs"))),
-         right.crossJoin(est.select(col("__cs").as("__rcs"))))
-      }
-
     // pad only one side for dwithin (padding both would double-count)
-    val l = withCells(leftIn, leftGeom, "__l", pad, lcs)
-    val r = withCells(rightIn, rightGeom, "__r", 0.0, rcs)
+    val l = withCells(left, leftGeom, "__l", pad)
+    val r = withCells(right, rightGeom, "__r", 0.0)
 
     val bboxOverlap =
       col("__lb.min_x") <= col("__rb.max_x") + pad && col("__lb.max_x") >= col("__rb.min_x") - pad &&
@@ -132,8 +118,8 @@ object SpatialJoin {
     val refX = greatest(col("__lb.min_x") - pad, col("__rb.min_x"))
     val refY = greatest(col("__lb.min_y") - pad, col("__rb.min_y"))
     val dedup =
-      floor(refX / lcs).cast("long") === col("__lcx") &&
-      floor(refY / lcs).cast("long") === col("__lcy")
+      floor(refX / cs).cast("long") === col("__lcx") &&
+      floor(refY / cs).cast("long") === col("__lcy")
 
     val joined = l.join(r,
       col("__lcx") === col("__rcx") && col("__lcy") === col("__rcy") &&
@@ -141,8 +127,7 @@ object SpatialJoin {
         exact(predicate, col("__lg"), col("__rg"), distance),
       "inner")
 
-    joined.drop("__lg", "__lb", "__lcx", "__lcy", "__rg", "__rb", "__rcx", "__rcy",
-      "__lcs", "__rcs")
+    joined.drop("__lg", "__lb", "__lcx", "__lcy", "__rg", "__rb", "__rcx", "__rcy")
   }
 
   private def exact(predicate: String, lg: Column, rg: Column, distance: Double): Column =
@@ -151,47 +136,50 @@ object SpatialJoin {
       case p => st(p, lg, rg)
     }
 
-  /** Per-side bbox statistics over a seeded random sample (plus the
-   *  first 64 rows so tiny inputs always contribute): mean bbox
-   *  width/height and global span. LocalLimit keeps the scan cheap —
-   *  each task stops after its share of rows. */
-  private def bboxStatsDf(df: DataFrame, g: Column): DataFrame = {
-    val b = df.select(st_extent(g).as("b"))
-    b.sample(withReplacement = false, 0.1, seed = 42).limit(4096)
-      .union(b.limit(64))
-      .select(
-        avg(col("b.max_x") - col("b.min_x")).as("w"),
-        avg(col("b.max_y") - col("b.min_y")).as("h"),
-        min(col("b.min_x")).as("x0"), max(col("b.max_x")).as("x1"),
-        min(col("b.min_y")).as("y0"), max(col("b.max_y")).as("y1"))
+  /** One side's bbox extents (x0, y0, x1, y1, side), sampled per
+   *  partition: each task keeps its first 64 rows (so tiny inputs
+   *  always contribute) plus a seeded 10% Bernoulli draw of the rest,
+   *  and stops reading at 4096. No `limit()`: Spark names a Limit's
+   *  generated-code field from a JVM-global counter, so each new plan
+   *  holding one recompiles its stage, even for an identical query. */
+  private def sampledExtents(df: DataFrame, g: Column, side: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(st_extent(g).as("b")).where(col("b").isNotNull)
+      .select(col("b.min_x"), col("b.min_y"), col("b.max_x"), col("b.max_y"))
+      .as[(Double, Double, Double, Double)]
+      .mapPartitions { it =>
+        val rnd = new java.util.Random(42L + org.apache.spark.TaskContext.getPartitionId())
+        it.zipWithIndex.collect { case (e, i) if i < 64 || rnd.nextDouble() < 0.1 => e }.take(4096)
+      }
+      .toDF("x0", "y0", "x1", "y1").withColumn("side", lit(side))
   }
 
-  /** 1-row, 1-column (`__cs`) frame computing the grid-cell estimate:
-   *  2× the larger side's mean bbox extent, span/256 for point-like
-   *  inputs, 1.0 as the degenerate fallback. Usable either collected
-   *  (driver path) or cross-joined as a broadcast scalar (plan path). */
+  /** 1-row, 1-column (`__cs`) frame computing the grid-cell estimate in
+   *  one aggregate over both sides' sampled extents: 2× the larger
+   *  side's mean bbox extent, span/256 for a point-like side, 1.0 as
+   *  the degenerate fallback. Collected on the driver, or embedded as
+   *  a scalar subquery (see [[join]]'s `driverSample`). */
   def cellSizeFrame(left: DataFrame, leftGeom: Column, right: DataFrame, rightGeom: Column): DataFrame = {
-    val ls = bboxStatsDf(left, leftGeom)
-    val rs = bboxStatsDf(right, rightGeom).toDF("rw", "rh", "rx0", "rx1", "ry0", "ry1")
-    def me(w: Column, h: Column, x0: Column, x1: Column, y0: Column, y1: Column): Column =
-      when(greatest(w, h) > 0, greatest(w, h))
-        .otherwise(greatest(x1 - x0, y1 - y0) / 256.0)
-    val cell = lit(2.0) * greatest(
-      me(col("w"), col("h"), col("x0"), col("x1"), col("y0"), col("y1")),
-      me(col("rw"), col("rh"), col("rx0"), col("rx1"), col("ry0"), col("ry1")))
+    def meanExtent(side: Int): Column = {
+      def of(c: Column) = when(col("side") === side, c)
+      val m = greatest(avg(of(col("x1") - col("x0"))), avg(of(col("y1") - col("y0"))))
+      val span = greatest(max(of(col("x1"))) - min(of(col("x0"))), max(of(col("y1"))) - min(of(col("y0"))))
+      when(m > 0, m).otherwise(span / 256.0)
+    }
+    val cell = lit(2.0) * greatest(meanExtent(0), meanExtent(1))
     val raw = coalesce(when(cell > 0, cell), lit(1.0))
-    // Quantize to 2 significant digits: the deferred path embeds this
-    // subplan once per join side, and floor(x/cs) cell ids computed with
-    // cs values differing by an ulp (float-sum merge order, broadcast
-    // reuse off) would silently drop matching pairs. Rounding to ~2
-    // significant digits makes divergence require the raw estimates to
-    // straddle a round() half-way boundary to within a few ulps —
-    // probability ~1e-13 per join, vs certain-adjacent-ulp without it.
+    // Quantize to 2 significant digits. An executed scalar subquery
+    // inlines its value into the generated code as a literal, so a raw
+    // estimate that wobbles with every fresh batch would change the
+    // code of every stage reading it and defeat Spark's codegen cache;
+    // the rounded value repeats across batches of similar shape.
     val step = pow(lit(10.0), floor(log(10.0, raw)) - 1)
-    ls.crossJoin(rs).select((round(raw / step) * step).as("__cs"))
+    sampledExtents(left, leftGeom, 0).union(sampledExtents(right, rightGeom, 1))
+      .agg((round(raw / step) * step).as("__cs"))
   }
 
-  /** Driver-side estimate (runs two small jobs; use from the explicit
+  /** Driver-side estimate (runs a small job; use from the explicit
    *  API only — the optimizer rule defers to [[cellSizeFrame]]). */
   def estimateCellSize(left: DataFrame, leftGeom: Column, right: DataFrame, rightGeom: Column): Double =
     cellSizeFrame(left, leftGeom, right, rightGeom).collect()(0).getDouble(0)

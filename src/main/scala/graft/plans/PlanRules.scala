@@ -23,9 +23,10 @@ import org.apache.spark.sql.graft.ColumnShim
  * predicate is a cheap residual filter).
  *
  * Config: `spark.graft.spatialJoin.cellSize` (double; unset/<=0 → the
- * cell size is estimated at RUNTIME from a broadcast random-sample
- * subplan — never via a plan-time collect), `spark.graft.spatialJoin
- * .enabled` (default true).
+ * cell size is estimated at RUNTIME by one reused scalar subquery over
+ * per-partition samples of both sides — never via a plan-time collect,
+ * and with no Limit operator, whose generated code differs per plan
+ * instance), `spark.graft.spatialJoin.enabled` (default true).
  */
 case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -89,7 +90,7 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
           val leftDf = ColumnShim.ofRows(spark, left)
           val rightDf = ColumnShim.ofRows(spark, right)
           // driverSample=false: with no configured cell size the
-          // estimator is embedded as a broadcast subplan instead of a
+          // estimator is embedded as a scalar subquery instead of a
           // collect() — a Spark job inside logical optimization would
           // block planning and re-enter the optimizer at scale
           val joined = SpatialJoin.join(
@@ -120,10 +121,9 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** The grid join's output is the original join's columns in order
    *  (left then right, helper columns dropped), but attribute ids may
-   *  have been re-aliased — e.g. the deferred cell-size subplan embeds
-   *  a sample of each side, and Spark's self-join dedup rewrites the
-   *  conflicting ids. Remap positionally (orig output i → base output
-   *  i), falling back to id identity for non-output refs. */
+   *  have been re-aliased (e.g. by Spark's self-join dedup of `a JOIN
+   *  a`). Remap positionally (orig output i → base output i), falling
+   *  back to id identity for non-output refs. */
   private def remapRefs(e: Expression, orig: Join, base: LogicalPlan): Expression = {
     require(base.output.length == orig.output.length,
       s"grid join output arity ${base.output.length} != original ${orig.output.length}")

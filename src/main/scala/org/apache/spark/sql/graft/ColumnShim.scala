@@ -17,6 +17,11 @@ object ColumnShim {
    *  loses integers above 2^53. */
   def integralDivide(a: Column, b: Column): Column =
     column(new org.apache.spark.sql.catalyst.expressions.IntegralDivide(expr(a), expr(b)))
+  /** `df`'s single value as an uncorrelated scalar subquery over its
+   *  OPTIMIZED plan: a rule adding it runs after the optimizer's
+   *  Subquery batch, and physical planning takes a subquery's plan as is. */
+  def scalarSubquery(df: org.apache.spark.sql.DataFrame): Column =
+    column(org.apache.spark.sql.catalyst.expressions.ScalarSubquery(df.queryExecution.optimizedPlan))
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

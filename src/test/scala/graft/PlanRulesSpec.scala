@@ -43,14 +43,19 @@ class PlanRulesSpec extends SparkSpec {
       val df2 = spark.sql(
         "SELECT pid, zid FROM pts_v JOIN zones_v ON ST_Contains(zone, pt)")
       assert(df2.as[(Long, Int)].collect().toSet == brute)
-      // dwithin with a foldable distance also rewrites
+      // dwithin with a foldable distance also rewrites; its one-sided
+      // pad must hold under a fixed and under an estimated (conf unset:
+      // scalar-subquery) cell size
       val bruteD = pts.crossJoin(zones).filter(st_dwithin($"pt", $"zone", lit(1.5)))
         .select("pid", "zid").as[(Long, Int)].collect().toSet
-      val dfD = spark.sql(
-        "SELECT pid, zid FROM pts_v JOIN zones_v ON ST_DWithin(pt, zone, 1.5)")
-      assert(!dfD.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-      assert(dfD.as[(Long, Int)].collect().toSet == bruteD)
-      spark.conf.unset("spark.graft.spatialJoin.cellSize")
+      for (cellSize <- Seq(Some("2.0"), None)) {
+        cellSize.fold(spark.conf.unset("spark.graft.spatialJoin.cellSize"))(
+          spark.conf.set("spark.graft.spatialJoin.cellSize", _))
+        val dfD = spark.sql(
+          "SELECT pid, zid FROM pts_v JOIN zones_v ON ST_DWithin(pt, zone, 1.5)")
+        assert(!dfD.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+        assert(dfD.as[(Long, Int)].collect().toSet == bruteD, s"cellSize $cellSize")
+      }
     }
   }
 
@@ -81,14 +86,64 @@ class PlanRulesSpec extends SparkSpec {
         df.queryExecution.executedPlan
         Thread.sleep(500)
         assert(jobs == 0, s"plan-time launched $jobs job(s)")
-        // the spatial join itself is a hash join on grid cells (the
-        // 1-row cell-size attach may legitimately be a nested loop)
+        // the spatial join is a hash join on grid cells, and the cell
+        // size reaches it as a scalar subquery, not a nested-loop attach
         val physical = df.queryExecution.executedPlan.toString
         assert(physical.contains("HashJoin [__lcx") || physical.contains("HashJoin[__lcx"),
           s"grid equi-join missing:\n${physical.take(3000)}")
+        assert(!physical.contains("BroadcastNestedLoopJoin"),
+          s"nested loop in the deferred plan:\n${physical.take(3000)}")
         // execution (which runs the sample-estimate subplan) is exact
         assert(df.as[(Long, Int)].collect().toSet == brute)
       } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("deferred SQL grid join compiles no new code for a second batch of the same data") {
+    // Each call builds a fresh DataFrame (a new plan instance) over the
+    // same rows, like a pipeline step joining a new batch.
+    def pts() = spark.createDataFrame((0 until 300).map(i => (i.toLong, (i % 30) + 0.25, (i / 30) + 0.75)))
+      .toDF("pid", "x", "y").select($"pid", st_point($"x", $"y").as("pt"))
+    def zones() = spark.createDataFrame((for (zx <- 0 until 5; zy <- 0 until 2)
+        yield (zx * 2 + zy, zx * 6.0, zy * 5.0, zx * 6.0 + 7.0, zy * 5.0 + 6.0)))
+      .toDF("zid", "x0", "y0", "x1", "y1")
+      .select($"zid", st_makeenvelope($"x0", $"y0", $"x1", $"y1").as("zone"))
+    val brute = pts().crossJoin(zones()).filter(st_within($"pt", $"zone"))
+      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    assert(brute.nonEmpty)
+
+    def run(): (Set[(Long, Int)], String) = {
+      pts().createOrReplaceTempView("pts_cg")
+      zones().createOrReplaceTempView("zones_cg")
+      val df = spark.sql("SELECT pid, zid FROM pts_cg JOIN zones_cg ON ST_Within(pt, zone)")
+      val got = df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      (got, df.queryExecution.executedPlan.toString)
+    }
+
+    withRules {
+      assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+      // a stage Janino rejects must fail here, not run interpreted
+      val fallback = spark.conf.getOption("spark.sql.codegen.fallback")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        assert(run()._1 == brute)
+        val compiles = org.apache.spark.metrics.source.CodegenMetrics
+          .METRIC_COMPILATION_TIME
+        val before = compiles.getCount
+        val (got, plan) = run()
+        assert(got == brute)
+        assert(compiles.getCount - before == 0,
+          s"second execution compiled ${compiles.getCount - before} class(es):\n$plan")
+        assert(!plan.contains("Limit"), s"Limit in the plan:\n$plan")
+        assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop in the plan:\n$plan")
+        // tree nodes of the adaptive plan's final section only: a line
+        // whose node is the subquery itself (reuses print as
+        // "ReusedSubquery Subquery ..."; the initial plan predates reuse)
+        val finalPlan = plan.split("\n\\+- == Initial Plan ==")(0)
+        val subqueries = "(?m)^[ :+|-]*Subquery subquery".r.findAllMatchIn(finalPlan).size
+        assert(subqueries == 1, s"want one non-reused cell-size subquery:\n$plan")
+      } finally fallback.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
+        spark.conf.set("spark.sql.codegen.fallback", _))
     }
   }
 
@@ -107,25 +162,29 @@ class PlanRulesSpec extends SparkSpec {
       .select("lid", "rid").as[(Int, Int)].collect().toSet
     assert(brute.size > 40, "fixture should produce cross-row matches")
 
+    val bruteW = l.crossJoin(r).filter(st_within($"lbox", $"rbox"))
+      .select("lid", "rid").as[(Int, Int)].collect().toSet
+
+    // a fixed cell size, then an estimated one (conf unset: the cell
+    // size comes from the scalar subquery); boxes span several cells
+    // under both, so the reference-point dedup is exercised
     withRules {
-      spark.conf.set("spark.graft.spatialJoin.cellSize", "3.0")
-      try {
+      for (cellSize <- Seq(Some("3.0"), None)) try {
+        cellSize.foreach(spark.conf.set("spark.graft.spatialJoin.cellSize", _))
         val df = spark.sql(
           """SELECT a.bid AS lid, b.bid AS rid
              FROM boxes_self a JOIN boxes_self b ON ST_Intersects(a.box, b.box)""")
         val physical = df.queryExecution.executedPlan.toString
         assert(!physical.contains("BroadcastNestedLoopJoin"),
           s"self spatial join not rewritten:\n${physical.take(3000)}")
-        assert(df.as[(Int, Int)].collect().toSet == brute)
+        assert(df.as[(Int, Int)].collect().toSet == brute, s"cellSize $cellSize")
 
         // asymmetric predicate on a self join (orientation must survive
         // the analyzer's exprId dedup of the two sides)
-        val bruteW = l.crossJoin(r).filter(st_within($"lbox", $"rbox"))
-          .select("lid", "rid").as[(Int, Int)].collect().toSet
         val dfW = spark.sql(
           """SELECT a.bid AS lid, b.bid AS rid
              FROM boxes_self a JOIN boxes_self b ON ST_Within(a.box, b.box)""")
-        assert(dfW.as[(Int, Int)].collect().toSet == bruteW)
+        assert(dfW.as[(Int, Int)].collect().toSet == bruteW, s"cellSize $cellSize")
       } finally spark.conf.unset("spark.graft.spatialJoin.cellSize")
     }
   }

@@ -172,6 +172,46 @@ object Probe {
         explain(graft.operators.SpatialJoin.join(lcgPts(1000L), zones25, col("pt"), col("zone"),
           "st_within", cellSize = 20.0).groupBy("zid").count())
 
+      case "sql_spatial_join_plan" =>
+        // the perfbench zone_join shape: SQL ST_Contains of 600 cached
+        // rotated 32-128-gons against a fresh 5000-point batch per
+        // execution, cell size left to the in-plan estimator
+        require(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+        val rnd = new scala.util.Random(7)
+        val zones = (0 until 600).map { i =>
+          val (cx, cy) = (20 + rnd.nextDouble() * 960, 20 + rnd.nextDouble() * 960)
+          val (r, k) = (6 + rnd.nextDouble() * 14, 32 + rnd.nextInt(97))
+          val theta = rnd.nextDouble() * 2 * math.Pi / k
+          val ring = (0 to k).map { j =>
+            val a = theta + 2 * math.Pi * (j % k) / k
+            s"${cx + r * math.cos(a)} ${cy + r * math.sin(a)}"
+          }
+          (i.toLong, ring.mkString("POLYGON((", ", ", "))"))
+        }
+        val zonesDf = spark.createDataFrame(zones).toDF("zid", "wkt")
+          .selectExpr("zid", "ST_GeomFromText(wkt) AS geom").cache()
+        zonesDf.count()
+        zonesDf.createOrReplaceTempView("zones")
+        @volatile var stages = 0
+        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+            stages += 1
+        })
+        val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        var last: DataFrame = null
+        (1 to 3).foreach { run =>
+          spark.createDataFrame((0 until 5000).map(i => (i.toLong, rnd.nextDouble() * 1000, rnd.nextDouble() * 1000)))
+            .toDF("id", "x", "y").selectExpr("id", "ST_Point(x, y) AS geom")
+            .createOrReplaceTempView("batch")
+          last = spark.sql(
+            "SELECT z.zid, count(*) FROM zones z JOIN batch p ON ST_Contains(z.geom, p.geom) GROUP BY z.zid")
+          val (s0, c0) = (stages, compiles.getCount)
+          time(s"execution $run (matches)") { last.collect().map(_.getLong(1)).sum }
+          Thread.sleep(200) // let the listener bus deliver the stage events
+          println(s"[probe] execution $run: ${stages - s0} stages, ${compiles.getCount - c0} codegen compiles")
+        }
+        explain(last)
+
       case other => sys.error(s"unknown probe: $other")
     }
     spark.stop()
